@@ -21,6 +21,8 @@ max_iterations backstop raises instead of spinning.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,28 +49,35 @@ def transitive_descendants(
     """
     edges = edges.select(
         F.col(child_col).alias("_child"), F.col(parent_col).alias("_parent")
-    ).where(F.col(child_col) != F.col(parent_col))
-    edges = _maybe_broadcast(edges.persist(), broadcast_edges)
+    ).where(F.col(child_col) != F.col(parent_col)).persist()
+    bedges = _maybe_broadcast(edges, broadcast_edges)
 
-    result = seeds.select(F.col(out_col).alias("_node")).distinct().localCheckpoint()
-    frontier = result
-
-    for _ in range(max_iterations):
-        children = (
-            frontier.join(edges, frontier["_node"] == edges["_parent"], "inner")
-            .select(F.col("_child").alias("_node"))
-            .distinct()
-        )
-        new_frontier = children.join(
-            _maybe_broadcast(result, broadcast_edges), "_node", "left_anti"
-        ).localCheckpoint()
-        if new_frontier.isEmpty():
-            break
-        result = result.unionByName(new_frontier).localCheckpoint()
-        frontier = new_frontier
-    else:
-        raise RuntimeError(f"closure did not converge in {max_iterations} iterations")
-
+    # the visited set is the union of the checkpointed frontiers (disjoint
+    # by construction); only the frontiers are checkpointed per round, and
+    # the result is their union, checkpointed once at the end
+    seen = [seeds.select(F.col(out_col).alias("_node")).distinct().localCheckpoint()]
+    frontier = seen[0]
+    try:
+        for _ in range(max_iterations):
+            children = (
+                frontier.join(bedges, frontier["_node"] == bedges["_parent"], "inner")
+                .select(F.col("_child").alias("_node"))
+                .distinct()
+            )
+            new_frontier = children.join(
+                _maybe_broadcast(reduce(DataFrame.unionByName, seen), broadcast_edges),
+                "_node",
+                "left_anti",
+            ).localCheckpoint()
+            if new_frontier.isEmpty():
+                break
+            seen.append(new_frontier)
+            frontier = new_frontier
+        else:
+            raise RuntimeError(f"closure did not converge in {max_iterations} iterations")
+        result = reduce(DataFrame.unionByName, seen).localCheckpoint()
+    finally:
+        edges.unpersist()
     return result.select(F.col("_node").alias(out_col))
 
 

@@ -11,6 +11,11 @@ Spark-first: each merge is ONE hash-aggregate shuffle on its key;
 token-set algebra is array functions; the length-bounded re-split is
 the shared fragment packer (functions/packer.py) + explode.
 
+Single-path rule: each merge reads its input once and emits through one
+explode over the grouped rows — a case that needs no re-split is a
+``when`` branch of the exploded array, never a second branch unioned
+back in (a union copies the whole input plan into each branch).
+
 Documented deviation (SURVEY.md §2.4/A4): the reference's emission
 order — and therefore its chunk boundaries and which member's
 non-key fields survive — depends on HashMap iteration order and is
@@ -76,39 +81,22 @@ def consolidate_with_info(annots: DataFrame) -> DataFrame:
         )
     )
 
-    passthrough_cond = (F.col("_n") == 1) & (
+    passthrough = (F.col("_n") == 1) & (
         F.coalesce(F.length("_rep.with_info"), F.lit(0)) <= WITH_INFO_MAX_LEN
     )
-    passthrough = grouped.where(passthrough_cond).select("_rep.*")
-
-    merged = (
-        grouped.where(~passthrough_cond)
-        .withColumn(
-            "_frags",
-            pack_fragments(F.array_remove(F.col("_tokens"), ""), WITH_INFO_MAX_LEN),
-        )
-        # an all-empty-WITH group still emits one (null-WITH) row
-        .withColumn(
-            "_frags",
-            F.when(
-                F.size("_frags") == 0, F.array(F.lit(None).cast("string"))
-            ).otherwise(F.col("_frags")),
-        )
-        .withColumn("_frag", F.explode("_frags"))
-        .select(
-            *[
-                (
-                    F.when(F.col("_frag") == "", None)
-                    .otherwise(F.col("_frag"))
-                    .alias(c)
-                    if c == "with_info"
-                    else F.col(f"_rep.{c}").alias(c)
-                )
-                for c in cols
-            ]
-        )
+    # one explode for both cases: a passthrough group emits its own
+    # WITH_INFO; a merged group emits its packed fragments (never empty
+    # strings: the "" token is removed first), and an all-empty-WITH group
+    # (no fragments) one null-WITH row (explode_outer)
+    frags = F.when(passthrough, F.array(F.col("_rep.with_info"))).otherwise(
+        pack_fragments(F.array_remove(F.col("_tokens"), ""), WITH_INFO_MAX_LEN)
     )
-    return passthrough.unionByName(merged)
+    return grouped.select("_rep", F.explode_outer(frags).alias("_frag")).select(
+        *[
+            F.col("_frag").alias(c) if c == "with_info" else F.col(f"_rep.{c}").alias(c)
+            for c in cols
+        ]
+    )
 
 
 def merge_duplicates(annots: DataFrame) -> DataFrame:

@@ -6,7 +6,17 @@ caches). Spark-first re-expression: every lookup cache becomes one
 broadcast-hash join against a dimension DataFrame; the reference's
 "try primary key, then secondary, then alt-id" cascade (MAHQC.java:
 101-167) becomes a single posexplode of prioritized candidate keys +
-one broadcast join + a min-priority filter — one pass, no driver loops.
+one broadcast join + a min-priority filter — no driver loops.
+
+Each GAF line is derived once. A DataFrame that feeds several branches
+is copied into every branch of the plan, so the fan-out points are
+materialized: ``derive_annotations`` persists (1) the GAF once
+``_row_id`` is assigned — which also pins the id — and (2) ``valid``
+after the species guard, which feeds both projection branches and three
+side outputs. Everything else is single-path: ``validate_gene_status``
+is one left-join chain (status → broadcast history map → active genes)
+rather than a union of active and revived rows. The caller releases the
+two frames with ``QCResult.release()``.
 
 All functions are DataFrame-in/DataFrame-out and never collect fact
 data to the driver; audit streams (the reference's 13 log4j appenders,
@@ -57,6 +67,14 @@ class QCResult:
     annots: DataFrame  # validated annotation rows (pre-consolidation)
     side_outputs: dict[str, DataFrame] = field(default_factory=dict)
     counter_frames: dict[str, DataFrame] = field(default_factory=dict)
+    persisted: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Unpersist the frames derive_annotations materialized; call once
+        every action over annots / side outputs / counters has run."""
+        for df in self.persisted:
+            df.unpersist()
+        self.persisted = []
 
 
 def gene_status(dims: Dims) -> DataFrame:
@@ -222,60 +240,70 @@ def validate_gene_status(
     chain to an ACTIVE terminal (else drop); de-dup per (row, gene)
     (MAHQC.validateGeneStatus; rgdcore getActiveRgdIdFromHistory).
 
-    The history chain is closed once by pointer doubling (operators/
-    closure.resolve_history) and broadcast — not followed per row.
+    One path over ``matched``: a left-join chain status → history map →
+    active genes, then the (row, gene) de-dup. The history map is closed
+    once over the history dimension by pointer doubling (operators/
+    closure.resolve_history) and broadcast — it never depends on the
+    fact ids, so ``matched`` appears in the plan once.
     Returns (valid, inactive_audit).
     """
     status = F.broadcast(
-        gene_status(dims).select("rgd_id", "object_status")
+        gene_status(dims).select(F.col("rgd_id").alias("_st_id"), "object_status")
     )
     with_status = matched.join(
-        status, matched["gene_rgd_id"] == status["rgd_id"], "left"
-    ).drop("rgd_id")
+        status, F.col("gene_rgd_id") == F.col("_st_id"), "left"
+    ).drop("_st_id")
+    is_active = F.coalesce(F.col("object_status") == "ACTIVE", F.lit(False))
+    inactive = with_status.where(~is_active).drop("object_status")
 
-    active = with_status.where(F.col("object_status") == "ACTIVE").drop(
-        "object_status"
-    )
-    inactive = with_status.where(
-        F.col("object_status").isNull() | (F.col("object_status") != "ACTIVE")
-    ).drop("object_status")
-
-    # resolve history for the inactive side only
-    resolved = resolve_history(
-        dims.rgd_id_history,
-        inactive.select(F.col("gene_rgd_id").alias("id")),
+    history = dims.rgd_id_history
+    closed = resolve_history(
+        history,
+        history.select(F.col("old_rgd_id").alias("id")),
         old_col="old_rgd_id",
         new_col="new_rgd_id",
     )
-    stepped = (
-        inactive.join(
-            F.broadcast(resolved),
-            inactive["gene_rgd_id"] == resolved["id"],
-            "left",
+    hist = F.broadcast(
+        closed.where(F.col("resolved_id") != F.col("id")).select(
+            F.col("id").alias("_h_old"), F.col("resolved_id").alias("_h_new")
         )
-        .where(F.col("resolved_id").isNotNull() & (F.col("resolved_id") != F.col("gene_rgd_id")))
-        .drop("id", "gene_rgd_id", "gene_symbol", "gene_name", "gene_species_key")
-        .withColumnRenamed("resolved_id", "gene_rgd_id")
     )
-    # the successor must itself be an ACTIVE gene; refresh gene attributes
-    gene_dim = F.broadcast(
+    # the successor must itself be an ACTIVE gene; its attributes replace
+    # the retired gene's
+    active_genes = F.broadcast(
         dims.genes.select(
-            F.col("rgd_id"),
-            F.col("gene_symbol"),
-            F.col("full_name").alias("gene_name"),
-            F.col("species_type_key").alias("gene_species_key"),
+            F.col("rgd_id").alias("_ag_gene_rgd_id"),
+            F.col("gene_symbol").alias("_ag_gene_symbol"),
+            F.col("full_name").alias("_ag_gene_name"),
+            F.col("species_type_key").alias("_ag_gene_species_key"),
         ).join(
-            gene_status(dims).where(F.col("object_status") == "ACTIVE").select("rgd_id"),
-            "rgd_id",
+            gene_status(dims)
+            .where(F.col("object_status") == "ACTIVE")
+            .select(F.col("rgd_id").alias("_ag_gene_rgd_id")),
+            "_ag_gene_rgd_id",
         )
     )
-    revived = stepped.join(
-        gene_dim, stepped["gene_rgd_id"] == gene_dim["rgd_id"], "inner"
-    ).drop("rgd_id")
-
-    valid = active.unionByName(
-        revived.select(*active.columns)
-    ).dropDuplicates(["_row_id", "gene_rgd_id"])
+    chained = with_status.join(
+        hist, F.col("gene_rgd_id") == F.col("_h_old"), "left"
+    ).join(
+        active_genes,
+        F.when(~is_active, F.col("_h_new")) == F.col("_ag_gene_rgd_id"),
+        "left",
+    )
+    revived = F.col("_ag_gene_rgd_id").isNotNull()
+    gene_cols = ("gene_rgd_id", "gene_symbol", "gene_name", "gene_species_key")
+    valid = (
+        chained.where(is_active | revived)
+        .select(
+            *[
+                F.when(revived, F.col(f"_ag_{c}")).otherwise(F.col(c)).alias(c)
+                if c in gene_cols
+                else F.col(c)
+                for c in matched.columns
+            ]
+        )
+        .dropDuplicates(["_row_id", "gene_rgd_id"])
+    )
     return valid, inactive
 
 
@@ -293,11 +321,18 @@ def derive_annotations(
     species guard (J5) → two projection branches — direct annotation +
     rat-ISO via ortholog join (J6/J7) — → shared field derivation and
     term validation (P9-P15, J8).
+
+    Persists the GAF (after ``_row_id``) and the species-guarded valid
+    rows; the caller runs every action it needs, then calls
+    ``QCResult.release()``.
     """
     side: dict[str, DataFrame] = {}
     counters: dict[str, DataFrame] = {}
 
-    gaf = gaf.withColumn("_row_id", F.monotonically_increasing_id())
+    # materialization point 1: every side output and both projection
+    # branches descend from these rows, and persisting pins _row_id
+    # (monotonically_increasing_id) to one value per line
+    gaf = gaf.withColumn("_row_id", F.monotonically_increasing_id()).persist()
 
     # ---- J9: Not4Curation anti-join (MAHQC.java:61-67)
     not4cur = F.broadcast(
@@ -326,7 +361,9 @@ def derive_annotations(
 
     wrong_species = valid.where(F.col("gene_species_key") != species_type_key)
     side["wrong_species"] = wrong_species
-    valid = valid.where(F.col("gene_species_key") == species_type_key)
+    # materialization point 2: feeds the direct and ISO branches,
+    # no_rat_gene, wrong_evidence and match_by_db
+    valid = valid.where(F.col("gene_species_key") == species_type_key).persist()
     counters["match_by_db"] = valid.groupBy("db").agg(
         F.count("*").alias("match_count")
     )
@@ -395,7 +432,10 @@ def derive_annotations(
     staged = direct.unionByName(iso)
     annots, load_side = load_into_full_annot(staged, dims, cfg)
     side.update(load_side)
-    return QCResult(annots=annots, side_outputs=side, counter_frames=counters)
+    return QCResult(
+        annots=annots, side_outputs=side, counter_frames=counters,
+        persisted=[gaf, valid],
+    )
 
 
 def load_into_full_annot(

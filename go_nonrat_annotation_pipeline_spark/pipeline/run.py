@@ -147,23 +147,28 @@ def process_species(
     qc = derive_annotations(
         spark, gaf, dims, cfg, job.species_type_key, job.ref_rgd_id
     )
-    for name, df in qc.side_outputs.items():
-        if audit_dir is not None:
-            out = os.path.join(
-                audit_dir, name, f"species_type_key={job.species_type_key}"
-            )
-            df.write.mode("overwrite").parquet(out)
-            rep.counters[name] = spark.read.parquet(out).count()
-        else:
-            rep.counters[name] = df.count()
-    for name, frame in qc.counter_frames.items():
-        for row in frame.collect():
-            rep.counters[f"{name}[{row[0]}]"] = row[-1]
+    try:
+        for name, df in qc.side_outputs.items():
+            if audit_dir is not None:
+                out = os.path.join(
+                    audit_dir, name, f"species_type_key={job.species_type_key}"
+                )
+                df.write.mode("overwrite").parquet(out)
+                rep.counters[name] = spark.read.parquet(out).count()
+            else:
+                rep.counters[name] = df.count()
+        for name, frame in qc.counter_frames.items():
+            for row in frame.collect():
+                rep.counters[f"{name}[{row[0]}]"] = row[-1]
 
-    consolidated = merge_duplicates(consolidate_with_info(qc.annots))
-    incoming = consolidated.drop("source_db")
+        consolidated = merge_duplicates(consolidate_with_info(qc.annots))
+        incoming = consolidated.drop("source_db")
 
-    rep.upsert = store.merge_upsert(incoming, run_ts)
+        rep.upsert = store.merge_upsert(incoming, run_ts)
+    finally:
+        # the read-back's persisted GAF holds the pre-merge store: drop it
+        # so no later plan over the same store path is served from it
+        qc.release()
     rep.stale_deleted = store.delete_stale(
         dims.rgd_ids,
         cfg.created_by,

@@ -196,32 +196,34 @@ class AnnotStore:
         Returns rows deleted (0 on abort).
         """
         pct = int(threshold_str.rstrip("%"))
-        current = self.count_for_ref(rgd_ids, ref_rgd_id, species_type_key)
-
+        # current (count_for_ref's count) and the candidate count come from
+        # one aggregate: one scan of the table, one broadcast of the ACTIVE
+        # ids (rgd_id is the key of rgd_ids, so the left join keeps rows 1:1)
+        active = rgd_ids.where(F.col("object_status") == "ACTIVE")
+        if species_type_key:
+            active = active.where(F.col("species_type_key") == species_type_key)
         table = self.read()
-        cand = table.where(
-            (F.col("created_by") == created_by)
-            & (F.col("last_modified_date") < F.lit(cutoff_ts).cast("timestamp"))
-            & (F.col("ref_rgd_id") == ref_rgd_id)
+        scoped = table.where(F.col("ref_rgd_id") == ref_rgd_id).join(
+            F.broadcast(active.select(F.col("rgd_id").alias("_active_id"))),
+            F.col("annotated_object_rgd_id") == F.col("_active_id"),
+            "left",
+        )
+        is_active = F.col("_active_id").isNotNull()
+        stale = (F.col("created_by") == created_by) & (
+            F.col("last_modified_date") < F.lit(cutoff_ts).cast("timestamp")
         )
         if species_type_key:
-            sp = rgd_ids.where(
-                (F.col("object_status") == "ACTIVE")
-                & (F.col("species_type_key") == species_type_key)
-            ).select("rgd_id")
-            cand = cand.join(
-                F.broadcast(sp),
-                F.col("annotated_object_rgd_id") == F.col("rgd_id"),
-                "left_semi",
-            )
-        n_cand = cand.count()
+            stale = stale & is_active
+        current, n_cand = scoped.agg(
+            F.count(F.when(is_active, 1)), F.count(F.when(stale, 1))
+        ).collect()[0]
         threshold = (pct * current) // 100
         if initial_count - (current - n_cand) > threshold:
             return 0  # abort: upstream corruption suspected (changes.txt:93-95)
         if n_cand == 0:
             return 0
         remaining = table.join(
-            cand.select("full_annot_key"), "full_annot_key", "left_anti"
+            scoped.where(stale).select("full_annot_key"), "full_annot_key", "left_anti"
         )
         self._swap_in(remaining)
         return n_cand

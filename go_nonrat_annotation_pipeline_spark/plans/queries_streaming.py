@@ -265,6 +265,7 @@ def stream_e2e_upsert(spark, sf_dir):
 
     staged = os.path.join(root, "incoming")
     incoming.repartition(3).write.parquet(staged)
+    qc.release()
     stream = (
         spark.readStream.schema(incoming.schema)
         .option("maxFilesPerTrigger", 1)  # force multiple micro-batches

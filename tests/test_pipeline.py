@@ -8,7 +8,9 @@ but LAST_MODIFIED_DATE), and the stale-delete threshold abort.
 
 from __future__ import annotations
 
+import gc
 import os
+import re
 from datetime import datetime, timedelta
 
 import pytest
@@ -19,12 +21,23 @@ from go_nonrat_annotation_pipeline_spark.pipeline.config import (
     MOUSE,
     PipelineConfig,
 )
+from go_nonrat_annotation_pipeline_spark.pipeline.consolidate import (
+    consolidate_with_info,
+    merge_duplicates,
+)
 from go_nonrat_annotation_pipeline_spark.pipeline.fixtures import (
     ISO_REF,
     MGI_REF,
+    MOUSE_GAF_LINES,
     build_dims,
     seed_full_annot,
     write_mouse_gaf,
+)
+from go_nonrat_annotation_pipeline_spark.pipeline.gaf import filter_sources, read_gaf
+from go_nonrat_annotation_pipeline_spark.pipeline.qc import (
+    Dims,
+    derive_annotations,
+    validate_gene_status,
 )
 from go_nonrat_annotation_pipeline_spark.pipeline.run import (
     SpeciesJob,
@@ -49,13 +62,32 @@ def env(spark, tmp_path_factory):
         SpeciesJob(CHINCHILLA, 0, None, None),  # read-back job, always last
     ]
     audit_dir = os.path.join(root, "audit")
+    persisted_before = _persistent_rdds(spark)
     report1 = run_pipeline(
         spark, cfg, dims, store, jobs, run_ts=RUN1_TS, audit_dir=audit_dir
     )
     return dict(
         spark=spark, cfg=cfg, dims=dims, store=store, jobs=jobs,
-        report1=report1, audit_dir=audit_dir,
+        report1=report1, audit_dir=audit_dir, gaf_path=gaf_path,
+        persisted_by_run=_persistent_rdds(spark) - persisted_before,
     )
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted, local checkpoints
+    left out: those cut the closures' lineage, are referenced by the
+    plans that read them and are freed by Spark's ContextCleaner."""
+    gc.collect()
+    spark._jvm.System.gc()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keys() if not rdds[k].isCheckpointed()}
+
+
+def test_run_releases_qc_caches(env):
+    """process_species unpersists what derive_annotations persisted once
+    its MERGE has run, and the closure releases its edge cache: a
+    two-species run leaves no cached DataFrame behind."""
+    assert env["persisted_by_run"] == set()
 
 
 def test_counters(env):
@@ -297,3 +329,119 @@ def test_threshold_abort(spark, tmp_path):
     )
     assert deleted == 1
     assert store.read().count() == 9
+
+
+def _operator_count(df, name: str) -> int:
+    """Distinct physical operators called ``name`` in df's plan. The
+    formatted explain lists each operator once in its detail section
+    ("(id) Name"), however often a cached subtree is printed in the tree."""
+    plan = df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+
+
+def test_merge_plan_derives_each_gaf_line_once(spark, env, tmp_path):
+    """The MERGE's plan scans the GAF once: the QC fan-out points are
+    persisted, and neither gene-status validation nor WITH_INFO
+    consolidation unions a branch back in."""
+    cfg = env["cfg"]
+    store = AnnotStore(spark, str(tmp_path / "fa"))
+    store.seed(seed_full_annot(spark, cfg))
+    gaf = filter_sources(read_gaf(spark, [env["gaf_path"]]), cfg.mouse_sources)
+    qc = derive_annotations(spark, gaf, env["dims"], cfg, MOUSE, MGI_REF)
+    try:
+        incoming = merge_duplicates(consolidate_with_info(qc.annots)).drop("source_db")
+        _, _, new_table = store.plan_merge(incoming, RUN1_TS)
+        assert _operator_count(new_table, "Scan csv") == 1
+    finally:
+        qc.release()
+    plain = spark.createDataFrame([], qc.annots.schema)
+    assert _operator_count(consolidate_with_info(plain), "Union") == 0
+
+
+def _status_dims(spark) -> Dims:
+    """Genes 1 and 3 ACTIVE, 2/4/5/6/7/8 RETIRED; history 2→3, 4→5
+    (retired end), 7→1, 8→2→3 (two hops); 6 has no history."""
+    base = build_dims(spark)
+    status = {1: "ACTIVE", 3: "ACTIVE"}
+    ids = range(1, 9)
+    return Dims(**{
+        **vars(base),
+        "genes": spark.createDataFrame(
+            [(i, f"G{i}", f"gene {i}", "protein-coding", 2) for i in ids],
+            base.genes.schema,
+        ),
+        "rgd_ids": spark.createDataFrame(
+            [(i, 1, status.get(i, "RETIRED"), 2) for i in ids],
+            base.rgd_ids.schema,
+        ),
+        "rgd_id_history": spark.createDataFrame(
+            [(2, 3), (4, 5), (7, 1), (8, 2)], base.rgd_id_history.schema
+        ),
+    })
+
+
+def test_validate_gene_status_cases(spark):
+    matched = spark.createDataFrame(
+        [
+            (1, 1, "G1", "gene 1", 2),  # active
+            (2, 2, "OLD2", "old 2", 2),  # retired → active 3
+            (3, 4, "G4", "gene 4", 2),  # retired → retired 5: dropped
+            (4, 6, "G6", "gene 6", 2),  # retired, no history: dropped
+            (5, 1, "G1", "gene 1", 2),  # active 1 ...
+            (5, 7, "G7", "gene 7", 2),  # ... and retired 7 → 1: one row
+            (6, 8, "G8", "gene 8", 2),  # retired → 2 → active 3
+        ],
+        "_row_id long, gene_rgd_id int, gene_symbol string, gene_name string, "
+        "gene_species_key int",
+    )
+    valid, inactive = validate_gene_status(matched, _status_dims(spark))
+    assert valid.columns == matched.columns
+    assert sorted(tuple(r) for r in valid.collect()) == [
+        (1, 1, "G1", "gene 1", 2),
+        (2, 3, "G3", "gene 3", 2),
+        (5, 1, "G1", "gene 1", 2),
+        (6, 3, "G3", "gene 3", 2),
+    ]
+    assert sorted((r._row_id, r.gene_rgd_id) for r in inactive.collect()) == [
+        (2, 2), (3, 4), (4, 6), (5, 7), (6, 8),
+    ]
+
+
+def test_row_id_stable_across_input_files(spark, env, tmp_path):
+    """With the GAF split over several files (several partitions, so
+    _row_id is not 0..n-1), every input row lands either in the valid
+    set or in exactly one dropping side output — a row revived through
+    its history is both valid and in the inactive audit."""
+    cfg = env["cfg"]
+    lines = MOUSE_GAF_LINES[1:]
+    paths = []
+    for i in range(3):
+        path = str(tmp_path / f"part{i}.gaf")
+        with open(path, "w") as fh:
+            fh.write("\n".join(lines[i::3]) + "\n")
+        paths.append(path)
+    gaf = filter_sources(read_gaf(spark, paths), cfg.mouse_sources)
+    qc = derive_annotations(spark, gaf, env["dims"], cfg, MOUSE, MGI_REF)
+    try:
+        inputs, valid = qc.persisted
+        assert inputs.rdd.getNumPartitions() > 1
+        ids = [r._row_id for r in inputs.select("_row_id").collect()]
+        assert len(ids) == len(set(ids)) == 11
+        valid_ids = {r._row_id for r in valid.select("_row_id").collect()}
+        drops = {
+            name: [r._row_id for r in qc.side_outputs[name].select("_row_id").collect()]
+            for name in (
+                "high_level_go_term", "catalytic_activity_ipi", "unmatched",
+                "inactive", "wrong_species",
+            )
+        }
+        for i in ids:
+            hits = [n for n, rows in drops.items() for r in rows if r == i]
+            if i in valid_ids:
+                assert hits in ([], ["inactive"]), (i, hits)
+            else:
+                assert len(hits) == 1, (i, hits)
+    finally:
+        qc.release()
