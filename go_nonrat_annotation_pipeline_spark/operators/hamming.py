@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import P  # noqa: F401 — documented contrast only
+from ..streaming.replay import drain
 from .util import ensure_parallelism
 
 BITS = 60
@@ -313,11 +314,7 @@ def hamming_dedup_stream(
             .localCheckpoint()
         )
 
-    q = doc_stream.writeStream.outputMode("append").foreachBatch(handle).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(doc_stream, handle)
     return state["flags"]
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.replay import drain
 from .diff import CHANGE_COL
 
 
@@ -114,13 +115,5 @@ def incremental_agg_stream(
             measure_col,
         ).localCheckpoint()
 
-    q = (
-        cdc_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(cdc_stream, handle)
     return state["agg"]

@@ -120,14 +120,14 @@ def block_candidate_pairs(
     never does — so that module keeps the direct form.
     """
     spark = assigned.sparkSession
-    compat_d = compatible_cell_pairs(full_cells, threshold, with_dist=True)
-    if not compat_d:
+    compat = compatible_cell_pairs(full_cells, threshold)
+    if not compat:
         return spark.createDataFrame(
             [],
             "vec_id_a long, vec_id_b long, "
             "va array<double>, vb array<double>",
         )
-    if len(compat_d) > _MAX_BLOCKS:
+    if len(compat) > _MAX_BLOCKS:
         # fired-drain regime (r14): coarsen to super-group blocks —
         # module doc REGIME BRANCH. Keys are (ga, gb) group pairs
         # derived from the compat pairs; each cell maps to the block
@@ -136,7 +136,7 @@ def block_candidate_pairs(
         # partner cell.
         ids_all = [int(cid) for cid, _, _ in full_cells]
         g = _cell_groups(ids_all, math.ceil(math.sqrt(len(ids_all))))
-        super_pairs = sorted({(g[ca], g[cb]) for ca, cb, _ in compat_d})
+        super_pairs = sorted({(g[ca], g[cb]) for ca, cb in compat})
         by_ga: dict[int, list[int]] = {}
         by_gb: dict[int, list[int]] = {}
         for ga, gb in super_pairs:
@@ -155,8 +155,8 @@ def block_candidate_pairs(
     else:
         # unfired regime: per-cell blocks, keyed on the compat pair
         # itself (ca, cb) — few and big by the k <= 64 bound
-        key_rows_l = [(int(a), int(a), int(b)) for a, b, _ in compat_d]
-        key_rows_r = [(int(b), int(a), int(b)) for a, b, _ in compat_d]
+        key_rows_l = [(int(a), int(a), int(b)) for a, b in compat]
+        key_rows_r = [(int(b), int(a), int(b)) for a, b in compat]
     # two independent frames from the same driver-side list: lhs and
     # rhs must not share the key lineage or the cogroup trips the
     # ambiguous-self-join analyzer check
@@ -193,10 +193,15 @@ def block_candidate_pairs(
         B = np.stack([np.asarray(x, dtype=np.float64) for x in right["v"]])
         ia = left["vid"].to_numpy()
         ib = right["vid"].to_numpy()
-        An = np.maximum(np.linalg.norm(A, axis=1), 1e-300)
-        Bn = np.maximum(np.linalg.norm(B, axis=1), 1e-300)
-        cosm = (A @ B.T) / An[:, None] / Bn[None, :]
-        mask = (cosm >= t_eff) & (ia[:, None] < ib[None, :])
+        # true norms, no clamp: a zero-norm or NaN-component vector
+        # scores NaN here, and NaN >= t holds for the caller's exact
+        # Spark cosine, so NaN pairs are kept (knn_kernel's mzero rule)
+        An = np.linalg.norm(A, axis=1)
+        Bn = np.linalg.norm(B, axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cosm = (A @ B.T) / An[:, None] / Bn[None, :]
+        keep = (cosm >= t_eff) | np.isnan(cosm)
+        mask = keep & (ia[:, None] < ib[None, :])
         r, c = np.nonzero(mask)
         return pd.DataFrame({"vec_id_a": ia[r], "vec_id_b": ib[c]})
 

@@ -1,7 +1,6 @@
-"""Join-view maintenance with DELETES — round-8 trailing module,
-registered AFTER WINDOW_R8 (operators/incrjoin.py and the insert-only
-streaming twin back frozen window rows; the retraction path lives in
-new modules per the freeze rule).
+"""Join-view maintenance with DELETES (the retraction path; the
+insert-only twins live in operators/incrjoin.py and
+queries_streaming_incrjoin.py).
 
 Both queries maintain V = L ⋈ R through a CDC feed that mixes inserts
 and deletes, then net-fold and aggregate; the oracle recomputes the
@@ -23,10 +22,6 @@ table, which is exactly what the oracle joins.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators.incrjoin_retract import (
@@ -36,6 +31,7 @@ from ..operators.incrjoin_retract import (
     with_sign,
 )
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _N_BATCHES = 3
@@ -184,40 +180,13 @@ def stream_join_view_retract(spark, sf_dir):
             state["R"].unionByName(dr).repartition(n_part, "k").localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_ivm_retract_")
-    try:
-        staged = os.path.join(root, "feed")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(_N_BATCHES):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(
-                f"pmod(hash(side, op, k, coalesce(qty, -1)), {_N_BATCHES})"
-                f" = {i}"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "side string, op string, k long, attr string, qty long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
+    src = feed.localCheckpoint()
+    batches = [
+        src.where(
+            f"pmod(hash(side, op, k, coalesce(qty, -1)), {_N_BATCHES}) = {i}"
         )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return _netted_aggregate(state["V"])
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        for i in range(_N_BATCHES)
+    ]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return _netted_aggregate(state["V"])

@@ -193,9 +193,9 @@ def stream_session_window(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # E2E incremental upsert THROUGH the stream path: the mouse species job
-# (GAF scan → QC → consolidation) delivered as parquet micro-batches
-# (maxFilesPerTrigger=1) into foreachBatch → AnnotStore.merge_upsert,
-# then the same threshold-guarded stale delete the batch job runs.
+# (GAF scan → QC → consolidation) replayed as three parquet
+# micro-batches into foreachBatch → AnnotStore.merge_upsert, then the
+# same threshold-guarded stale delete the batch job runs.
 # Mirrors pipeline_e2e_upsert minus the chinchilla read-back job; the
 # 9003 stale seed row is deleted, 9001 touches, 9002 updates, six rows
 # insert. Safe to split across micro-batches: A4 consolidation leaves
@@ -246,57 +246,60 @@ def stream_e2e_upsert(spark, sf_dir):
     from ..pipeline.gaf import filter_sources, read_gaf
     from ..pipeline.qc import derive_annotations
     from ..pipeline.sink import AnnotStore
+    from ..streaming.replay import replay
     from ..streaming.stream import merge_into_store
     from .queries_pipeline import _RUN_TS
 
     cfg = PipelineConfig()
     dims = build_dims(spark)
-    root = tempfile.mkdtemp(prefix="stream_e2e_upsert_")
-    gaf_path = write_mouse_gaf(os.path.join(root, "mgi.gaf"))
+    with tempfile.TemporaryDirectory(prefix="stream_e2e_upsert_") as root:
+        gaf_path = write_mouse_gaf(os.path.join(root, "mgi.gaf"))
 
-    store = AnnotStore(spark, os.path.join(root, "full_annot"))
-    store.seed(seed_full_annot(spark, cfg))
-    count0 = store.count_for_ref(dims.rgd_ids, MGI_REF, MOUSE)
+        store = AnnotStore(spark, os.path.join(root, "full_annot"))
+        store.seed(seed_full_annot(spark, cfg))
+        count0 = store.count_for_ref(dims.rgd_ids, MGI_REF, MOUSE)
 
-    # batch-derive the incoming annotations, then DELIVER them as a stream
-    gaf = filter_sources(read_gaf(spark, [gaf_path]), cfg.mouse_sources)
-    qc = derive_annotations(spark, gaf, dims, cfg, MOUSE, MGI_REF)
-    incoming = merge_duplicates(consolidate_with_info(qc.annots)).drop("source_db")
+        # batch-derive the incoming annotations, then DELIVER them as a
+        # stream of three micro-batches
+        gaf = filter_sources(read_gaf(spark, [gaf_path]), cfg.mouse_sources)
+        qc = derive_annotations(spark, gaf, dims, cfg, MOUSE, MGI_REF)
+        incoming = (
+            merge_duplicates(consolidate_with_info(qc.annots))
+            .drop("source_db")
+            .localCheckpoint()
+        )
+        qc.release()
+        key = F.pmod(F.hash(*incoming.columns), F.lit(3))
+        with replay(spark, [incoming.where(key == i) for i in range(3)]) as r:
+            merge_into_store(r.stream, store, _RUN_TS)
 
-    staged = os.path.join(root, "incoming")
-    incoming.repartition(3).write.parquet(staged)
-    qc.release()
-    stream = (
-        spark.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(staged)
-    )
-    merge_into_store(stream, store, _RUN_TS)
-
-    store.delete_stale(
-        dims.rgd_ids,
-        cfg.created_by,
-        _RUN_TS - timedelta(minutes=cfg.stale_cutoff_minutes),
-        MGI_REF,
-        count0,
-        cfg.stale_annot_delete_threshold,
-        MOUSE,
-    )
-    return store.read().select(
-        "term_acc",
-        F.col("annotated_object_rgd_id").cast("int").alias(
-            "annotated_object_rgd_id"
-        ),
-        "evidence",
-        F.col("ref_rgd_id").cast("int").alias("ref_rgd_id"),
-        "with_info",
-        "xref_source",
-        "notes",
-        "data_src",
-        "object_symbol",
-        F.date_format("created_date", "yyyy-MM-dd HH:mm:ss").alias("created_date"),
-        F.date_format("last_modified_date", "yyyy-MM-dd HH:mm:ss").alias(
-            "last_modified_date"
-        ),
-    )
+        store.delete_stale(
+            dims.rgd_ids,
+            cfg.created_by,
+            _RUN_TS - timedelta(minutes=cfg.stale_cutoff_minutes),
+            MGI_REF,
+            count0,
+            cfg.stale_annot_delete_threshold,
+            MOUSE,
+        )
+        # pinned before the store directory is removed
+        return store.read().select(
+            "term_acc",
+            F.col("annotated_object_rgd_id").cast("int").alias(
+                "annotated_object_rgd_id"
+            ),
+            "evidence",
+            F.col("ref_rgd_id").cast("int").alias("ref_rgd_id"),
+            "with_info",
+            "xref_source",
+            "notes",
+            "data_src",
+            "object_symbol",
+            F.date_format("created_date", "yyyy-MM-dd HH:mm:ss").alias(
+                "created_date"
+            ),
+            F.date_format("last_modified_date", "yyyy-MM-dd HH:mm:ss").alias(
+                "last_modified_date"
+            ),
+        ).localCheckpoint()
 

@@ -1,5 +1,4 @@
-"""Streaming association-rule maintenance — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Streaming association-rule maintenance.
 
 The incremental form of q_assoc_rules: baskets arrive WHOLE in
 micro-batches (arrival split by order key, the invariant a real
@@ -23,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .queries_assoc_rules import _SUP_DEN, _SUP_NUM
 from .registry import register
 
@@ -141,103 +141,70 @@ def stream_assoc_rules(spark, sf_dir):
             .localCheckpoint()
         )
 
-    import os
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_assoc_")
-    try:
-        staged = os.path.join(root, "li")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            li.where(f"l_orderkey % 3 = {i}").select(
-                "l_orderkey", "l_partkey"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("l_orderkey long, l_partkey long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
+    src = li.select("l_orderkey", "l_partkey").localCheckpoint()
+    batches = [src.where(f"l_orderkey % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    st = state["s"]
+    nrow = st.where("k = 2").select("sup").collect()
+    n = int(nrow[0][0]) if nrow else 0
+    isup = st.where("k = 0").select(
+        F.col("pa").alias("p"), "sup"
+    )
+    psup = st.where("k = 1").select(
+        "pa", "pb", F.col("sup").alias("sup_ab")
+    )
+    freq = isup.where(
+        F.col("sup") * _SUP_DEN >= F.lit(n) * _SUP_NUM
+    )
+    fpairs = (
+        psup
+        .where(
+            F.col("sup_ab") * _SUP_DEN >= F.lit(n) * _SUP_NUM
         )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
+        .join(
+            F.broadcast(
+                freq.select(
+                    F.col("p").alias("pa"),
+                    F.col("sup").alias("sup_a"),
+                )
+            ),
+            "pa",
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        st = state["s"]
-        nrow = st.where("k = 2").select("sup").collect()
-        n = int(nrow[0][0]) if nrow else 0
-        isup = st.where("k = 0").select(
-            F.col("pa").alias("p"), "sup"
+        .join(
+            F.broadcast(
+                freq.select(
+                    F.col("p").alias("pb"),
+                    F.col("sup").alias("sup_b"),
+                )
+            ),
+            "pb",
         )
-        psup = st.where("k = 1").select(
-            "pa", "pb", F.col("sup").alias("sup_ab")
-        )
-        freq = isup.where(
-            F.col("sup") * _SUP_DEN >= F.lit(n) * _SUP_NUM
-        )
-        fpairs = (
-            psup
-            .where(
-                F.col("sup_ab") * _SUP_DEN >= F.lit(n) * _SUP_NUM
-            )
-            .join(
-                F.broadcast(
-                    freq.select(
-                        F.col("p").alias("pa"),
-                        F.col("sup").alias("sup_a"),
-                    )
-                ),
-                "pa",
-            )
-            .join(
-                F.broadcast(
-                    freq.select(
-                        F.col("p").alias("pb"),
-                        F.col("sup").alias("sup_b"),
-                    )
-                ),
-                "pb",
-            )
-        )
-        rules = fpairs.select(
-            F.col("pa").alias("antecedent"),
-            F.col("pb").alias("consequent"),
+    )
+    rules = fpairs.select(
+        F.col("pa").alias("antecedent"),
+        F.col("pb").alias("consequent"),
+        "sup_ab",
+        F.col("sup_a").alias("sup_ante"),
+        F.col("sup_b").alias("sup_cons"),
+    ).unionByName(
+        fpairs.select(
+            F.col("pb").alias("antecedent"),
+            F.col("pa").alias("consequent"),
             "sup_ab",
-            F.col("sup_a").alias("sup_ante"),
-            F.col("sup_b").alias("sup_cons"),
-        ).unionByName(
-            fpairs.select(
-                F.col("pb").alias("antecedent"),
-                F.col("pa").alias("consequent"),
-                "sup_ab",
-                F.col("sup_b").alias("sup_ante"),
-                F.col("sup_a").alias("sup_cons"),
-            )
+            F.col("sup_b").alias("sup_ante"),
+            F.col("sup_a").alias("sup_cons"),
         )
-        return rules.select(
-            "antecedent",
-            "consequent",
-            "sup_ab",
-            F.expr(
-                "CAST(sup_ab * 1000000 DIV sup_ante AS BIGINT)"
-            ).alias("conf_ppm"),
-            F.expr(
-                f"CAST(sup_ab * {n} * 1000000"
-                " DIV (sup_ante * sup_cons) AS BIGINT)"
-            ).alias("lift_ppm"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    return rules.select(
+        "antecedent",
+        "consequent",
+        "sup_ab",
+        F.expr(
+            "CAST(sup_ab * 1000000 DIV sup_ante AS BIGINT)"
+        ).alias("conf_ppm"),
+        F.expr(
+            f"CAST(sup_ab * {n} * 1000000"
+            " DIV (sup_ante * sup_cons) AS BIGINT)"
+        ).alias("lift_ppm"),
+    ).localCheckpoint()

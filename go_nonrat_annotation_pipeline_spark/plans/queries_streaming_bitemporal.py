@@ -1,5 +1,4 @@
-"""Streaming bitemporal store query — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Streaming bitemporal store query.
 
 The stream twin of q_bitemporal_history: the synthesized assertion
 log (backdated corrections included) arrives in three micro-batches
@@ -11,14 +10,12 @@ arrival order are invisible (streaming/bitemporal_stream.py doc)."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from ..streaming.bitemporal_stream import (
-    ASSERT_SCHEMA,
     assertions_stream_to_store,
     bitemporal_view,
 )
+from ..streaming.replay import replay
 from ..operators import bitemporal as BT
 from .registry import register
 from .queries_bitemporal import _SRC, _asserts
@@ -42,35 +39,12 @@ from .queries_bitemporal import _SRC, _asserts
     "drained history hash-equals the batch reconstruction",
 )
 def stream_bitemporal_history(spark, sf_dir):
-    asserts = _asserts(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_bitemporal_")
-    try:
-        staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(f"_tie % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(ASSERT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        store = os.path.join(root, "store")
+    src = _asserts(spark, sf_dir).localCheckpoint()
+    with replay(spark, [src.where(f"_tie % 3 = {i}") for i in range(3)]) as r:
+        store = os.path.join(r.root, "store")
         assertions_stream_to_store(
-            stream, store, os.path.join(root, "ckpt")
+            r.stream, store, os.path.join(r.root, "ckpt")
         )
         # pin the view before the temp store is removed (executor-side
         # blocks, not a driver collect — the family pattern)
         return bitemporal_view(spark, store).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

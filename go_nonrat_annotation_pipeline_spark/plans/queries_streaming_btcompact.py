@@ -1,5 +1,4 @@
-"""Policy-compacted streaming bitemporal store — round-11 module,
-registered AFTER WINDOW_R11 (leads round 12).
+"""Policy-compacted streaming bitemporal store.
 
 The compaction twin of ``stream_bitemporal_history``: the SAME
 synthesized assertion log drains through the policy-compacting handler
@@ -16,15 +15,13 @@ correctness claim of the fold (winner + carried absorb-count per
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from ..operators import bitemporal as BT
 from ..streaming.bitemporal_compact import (
     bitemporal_view_compacted,
     make_compacting_bitemporal_handler,
 )
-from ..streaming.bitemporal_stream import ASSERT_SCHEMA
+from ..streaming.replay import drain, replay
 from .registry import register
 from .queries_bitemporal import _SRC, _asserts
 
@@ -48,47 +45,13 @@ from .queries_bitemporal import _SRC, _asserts
     "instead of correction history",
 )
 def stream_bitemporal_compacted(spark, sf_dir):
-    asserts = _asserts(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_btcompact_")
-    try:
-        staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(f"_tie % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(ASSERT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        store = os.path.join(root, "store")
+    src = _asserts(spark, sf_dir).localCheckpoint()
+    with replay(spark, [src.where(f"_tie % 3 = {i}") for i in range(3)]) as r:
+        store = os.path.join(r.root, "store")
         # threshold 0 + check_every 1: fold at EVERY batch boundary —
         # the adversarial setting for the invisibility claim
         handler = make_compacting_bitemporal_handler(
             spark, store, threshold=0.0, check_every=1
         )
-        q = (
-            stream.writeStream.outputMode("append")
-            .option(
-                "checkpointLocation", os.path.join(root, "ckpt")
-            )
-            .foreachBatch(handler)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(r.stream, handler, checkpoint=os.path.join(r.root, "ckpt"))
         return bitemporal_view_compacted(spark, store).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -1,9 +1,7 @@
 """As-of read AT/ABOVE the knowledge horizon on a bitemporal store
-that ACTUALLY folded — round-12 module, registered AFTER WINDOW_R12
-(leads round 13). Closes VERDICT r11 Next #6: the refusal path below
-the horizon was pytest-pinned (tests/test_bitemporal_compact.py) but
-no registered query exercised a reconstructible as-of on a folded
-store.
+that ACTUALLY folded. The refusal path below the horizon is
+pytest-pinned (tests/test_bitemporal_compact.py); this query exercises
+a reconstructible as-of on a folded store.
 
 The production rhythm this models: stream assertions, fold during a
 quiet window (stream stopped, checkpoint committed — the epochal
@@ -27,8 +25,6 @@ current knowledge.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from ..operators import bitemporal as BT
 from ..streaming.bitemporal_compact import (
@@ -37,7 +33,7 @@ from ..streaming.bitemporal_compact import (
     knowledge_horizon,
     make_compacting_bitemporal_handler,
 )
-from ..streaming.bitemporal_stream import ASSERT_SCHEMA
+from ..streaming.replay import drain, replay, stage
 from .registry import register
 from .queries_bitemporal import _SRC, _asserts
 
@@ -67,65 +63,31 @@ _T2_US = 1_705_795_200_000_000
     "pytest-pinned",
 )
 def stream_btcompact_asof(spark, sf_dir):
-    asserts = _asserts(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_btcasof_")
-    try:
-        staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        cuts = [
-            f"recorded_us < {_T1_US}",
-            f"recorded_us >= {_T1_US} AND recorded_us < {_T2_US}",
-            f"recorded_us >= {_T2_US}",
-        ]
+    src = _asserts(spark, sf_dir).localCheckpoint()
+    segments = [
+        src.where(f"recorded_us < {_T1_US}"),
+        src.where(f"recorded_us >= {_T1_US} AND recorded_us < {_T2_US}"),
+        src.where(f"recorded_us >= {_T2_US}"),
+    ]
+    with replay(spark, segments[:2]) as r:
+        store = os.path.join(r.root, "store")
+        ckpt = os.path.join(r.root, "ckpt")
 
-        def stage(i: int) -> None:
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(cuts[i]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-
-        store = os.path.join(root, "store")
-        ckpt = os.path.join(root, "ckpt")
-
-        def drain() -> None:
+        def run() -> None:
             handler = make_compacting_bitemporal_handler(
                 spark, store, threshold=0.0, check_every=1
             )
-            q = (
-                spark.readStream.schema(ASSERT_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(staged)
-                .writeStream.outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .foreachBatch(handler)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            drain(r.stream, handler, checkpoint=ckpt)
 
-        stage(0)
-        stage(1)
-        drain()
+        run()
         # offline fold in the quiet window (epochal contract: stream
         # stopped, checkpoint committed). Horizon = max recorded over
         # segments 0-1 < T2, so the T2 cutoff stays reconstructible.
         fold_bitemporal_store(spark, store)
         h = knowledge_horizon(store)
         assert h is not None and h < _T2_US, (h, _T2_US)
-        stage(2)
-        drain()  # same checkpoint: only the new file replays
+        stage(segments[2], r.staged, 2)
+        run()  # same checkpoint: only the new file replays
         return bitemporal_view_compacted(
             spark, store, as_of_us=_T2_US
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -1,5 +1,4 @@
-"""Streaming dead-letter quarantine — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming dead-letter quarantine.
 
 The stream twin of q_json_quarantine_rows: each micro-batch parse-or-
 null routes its rows, quarantined rows append to a durable side store
@@ -13,13 +12,10 @@ not a post-hoc scan.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _CORRUPT = "event_id % 7 = 0"
@@ -71,39 +67,8 @@ def stream_json_quarantine(spark, sf_dir):
             state["q"].unionByName(dead).localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_dlq_")
-    try:
-        staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            events.where(f"event_id % 3 = {i}").select(
-                "event_id", "event_type", "props"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, event_type string, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["q"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = events.select("event_id", "event_type", "props").localCheckpoint()
+    batches = [src.where(f"event_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["q"]

@@ -1,5 +1,4 @@
-"""Streaming decontamination gate — round-9 trailing module,
-registered AFTER WINDOW_R9; round-10 rotation fill.
+"""Streaming decontamination gate.
 
 The stream twin of q_decontam_verdicts: documents arrive in
 micro-batches (the ingest lane of a training-data pipeline); each
@@ -14,14 +13,11 @@ a per-trigger gate at ingest, not a post-hoc corpus scan.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators import decontam as DC
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _N = 8
@@ -77,37 +73,8 @@ def stream_decontam_gate(spark, sf_dir):
         )
         state["q"] = state["q"].unionByName(dirty).localCheckpoint()
 
-    root = tempfile.mkdtemp(prefix="stream_decontam_")
-    try:
-        staged = os.path.join(root, "docs")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            docs.where(_CORPUS).where(f"doc_id % 3 = {i}").select(
-                "doc_id", "text"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["q"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = docs.where(_CORPUS).select("doc_id", "text").localCheckpoint()
+    batches = [src.where(f"doc_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["q"]

@@ -1,5 +1,4 @@
-"""Streaming EWMA maintenance — round-13 module, registered AFTER
-WINDOW_R13 (leads round 14).
+"""Streaming EWMA maintenance.
 
 The incremental form of ``q_ewma_daily``: events arrive in
 micro-batches and the sufficient statistic for the smoother — the
@@ -21,13 +20,10 @@ watermark bookkeeping.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import Window, functions as F
 
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .queries_timeseries2 import _EW_HI, _EW_LO, _K
 from .registry import register
 
@@ -97,40 +93,14 @@ def stream_ewma_daily(spark, sf_dir):
             .localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_ewma_")
-    try:
-        staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            ev.where(f"event_id % 3 = {i}").select(
-                "event_type", "d"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("event_type string, d date")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return _ewma_from_counts(spark, state["cnt"]).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = ev.localCheckpoint()
+    batches = [
+        src.where(f"event_id % 3 = {i}").select("event_type", "d")
+        for i in range(3)
+    ]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return _ewma_from_counts(spark, state["cnt"]).localCheckpoint()
 
 
 def _adopt_batch_oracle():

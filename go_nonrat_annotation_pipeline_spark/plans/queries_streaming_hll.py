@@ -1,5 +1,4 @@
-"""Streaming HLL distinct-count maintenance — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming HLL distinct-count maintenance.
 
 The streaming form of q_hll_registers: an event stream folds into the
 64-register HLL state micro-batch by micro-batch (union + register-wise
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import sketches as SK
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _P = 6  # 64 registers
@@ -55,41 +55,8 @@ def stream_hll_distinct(spark, sf_dir):
             .localCheckpoint()
         )
 
-    import os
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_hll_")
-    try:
-        staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            events.where(f"event_id % 3 = {i}").select(
-                "event_id", "user_id"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["regs"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = events.select("event_id", "user_id").localCheckpoint()
+    batches = [src.where(f"event_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["regs"]

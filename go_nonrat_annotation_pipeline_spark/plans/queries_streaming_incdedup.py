@@ -1,6 +1,4 @@
-"""Streaming incremental-dedup E2E query — registered AFTER the
-round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Streaming incremental-dedup E2E query.
 
 The continuous-ingestion flagship: a document stream is near-dup-gated
 batch-by-batch against an ACCUMULATING store
@@ -8,24 +6,21 @@ batch-by-batch against an ACCUMULATING store
 operators/dedup.incremental_minhash_dups). Clean docs are admitted, so
 batch N dedups against the initial store PLUS everything admitted in
 batches 1..N-1 — the order-dependent semantics a real ingest pipeline
-has. Determinism: the three micro-batches are pinned by file
-modification time (FileStreamSource processes in (mtime, path) order
-with maxFilesPerTrigger=1) and partitioned by a doc_id formula, so the
-DuckDB oracle can unroll the three stages as chained CTEs, threading
-each stage's admitted set into the next stage's store side.
+has. Determinism: the three micro-batches replay in a fixed order
+(streaming/replay.py pins it) and are partitioned by a doc_id
+formula, so the DuckDB oracle can unroll the three stages as chained
+CTEs, threading each stage's admitted set into the next stage's store
+side.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
 from ..operators import dedup as D
 from ..sources.testdata import load_table
+from ..streaming.replay import replay
 from ..streaming.stream import incremental_dedup_stream
 from .registry import register
 from .shared_sql import SH as _SH
@@ -92,26 +87,6 @@ _ORACLE = (
 )
 
 
-def _stage_batches(spark, docs, root: str) -> str:
-    """Write each incoming batch as ONE parquet file with pinned mtimes
-    so FileStreamSource's (mtime, path) order fixes batch order."""
-    staged = os.path.join(root, "incoming")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
-    for i in range(_N_BATCHES):
-        batch = docs.where(F.expr(_batch_pred_spark(i))).select("doc_id", "text")
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
-
-
 def _batch_pred_spark(i: int) -> str:
     return f"doc_id % 5 = 0 AND (doc_id div 5) % {_N_BATCHES} = {i}"
 
@@ -128,11 +103,12 @@ def _batch_pred_spark(i: int) -> str:
 def stream_incremental_dedup(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     store0 = docs.where(F.expr(_STORE0))
-    root = tempfile.mkdtemp(prefix="stream_inc_dedup_")
-    staged = _stage_batches(spark, docs, root)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    return incremental_dedup_stream(stream, store0, verify_threshold=_THRESH)
+    incoming = docs.where(~F.expr(_STORE0)).select("doc_id", "text")
+    src = incoming.localCheckpoint()
+    batches = [
+        src.where(F.expr(_batch_pred_spark(i))) for i in range(_N_BATCHES)
+    ]
+    with replay(spark, batches) as r:
+        return incremental_dedup_stream(
+            r.stream, store0, verify_threshold=_THRESH
+        )

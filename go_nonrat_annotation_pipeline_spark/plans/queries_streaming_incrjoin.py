@@ -1,5 +1,4 @@
-"""Streaming JOIN-view maintenance — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming JOIN-view maintenance.
 
 The streaming twin of q_incremental_join_maintain: ONE stream carries
 tagged insert rows for BOTH join sides (the realistic CDC feed), and
@@ -19,14 +18,11 @@ repartition guard (the looped-union partition-growth lesson).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators.incrjoin import delta_join
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _N_BATCHES = 3
@@ -97,44 +93,13 @@ def stream_incremental_join(spark, sf_dir):
             .localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_ivm_")
-    try:
-        staged = os.path.join(root, "feed")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(_N_BATCHES):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(
-                f"(k + sub) % {_N_BATCHES} = {i}"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "side string, k long, attr string, qty long, sub long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["V"].groupBy(
-            F.col("attr").alias("o_orderpriority")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("qty").alias("sum_qty"),
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = feed.localCheckpoint()
+    batches = [
+        src.where(f"(k + sub) % {_N_BATCHES} = {i}") for i in range(_N_BATCHES)
+    ]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["V"].groupBy(F.col("attr").alias("o_orderpriority")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("qty").alias("sum_qty"),
+    )

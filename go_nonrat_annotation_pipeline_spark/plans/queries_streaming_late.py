@@ -1,10 +1,9 @@
-"""Streaming late-data watermark audit (streaming/late.py) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Streaming late-data watermark audit (streaming/late.py).
 
 The stream is the events log split into three ARRIVAL-ordered
 micro-batches by event_id modulus (arrival order deliberately ≠
-event-time order — that disorder is what makes data late), pinned by
-file mtime. The audit recomputes Structured Streaming's documented
+event-time order — that disorder is what makes data late), replayed
+in that order. The audit recomputes Structured Streaming's documented
 watermark rule (wm for batch i = max event-time through batch i-1,
 minus delay) and counts the rows a withWatermark(delay) aggregate
 would drop. The DuckDB oracle replays the same batch assignment with
@@ -14,40 +13,13 @@ exactly.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from ..sources.testdata import load_table
 from ..streaming.late import late_data_audit
+from ..streaming.replay import replay
 from .registry import register
 
 _N_BATCHES = 3
 _DELAY_US = 3_600_000_000  # 1 hour allowed lateness
-
-
-def _stage_by_arrival(spark, events, root: str) -> str:
-    """Write the events log as _N_BATCHES mtime-pinned parquet files
-    split by event_id % _N_BATCHES (arrival order, NOT time order)."""
-    staged = os.path.join(root, "events")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
-    for i in range(_N_BATCHES):
-        batch = events.where(
-            f"event_id % {_N_BATCHES} = {i}"
-        ).select("event_id", "ts")
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
 
 
 @register(
@@ -88,16 +60,11 @@ def _stage_by_arrival(spark, events, root: str) -> str:
 )
 def stream_late_data_audit(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="stream_late_")
-    try:
-        staged = _stage_by_arrival(spark, events, root)
-        stream = (
-            spark.readStream.schema("event_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        # late_data_audit drains eagerly; its result is driver-built
-        # rows, so the staging dir can be reclaimed on return
-        return late_data_audit(stream, _DELAY_US)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = events.select("event_id", "ts").localCheckpoint()
+    # arrival order = event_id % _N_BATCHES, NOT event-time order
+    batches = [
+        src.where(f"event_id % {_N_BATCHES} = {i}") for i in range(_N_BATCHES)
+    ]
+    with replay(spark, batches) as r:
+        # late_data_audit drains eagerly and returns driver-built rows
+        return late_data_audit(r.stream, _DELAY_US)

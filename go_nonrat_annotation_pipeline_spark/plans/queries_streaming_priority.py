@@ -1,5 +1,4 @@
-"""Streaming priority sample — round-9 trailing module, registered
-AFTER WINDOW_R9.
+"""Streaming priority sample.
 
 The stream twin of q_priority_sample: the budget-k weighted sample is
 maintained across micro-batches by keeping the running top-(k+1) rows
@@ -14,14 +13,11 @@ the oracle computes.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators import sampling_priority as PR
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _K = 200
@@ -91,47 +87,17 @@ def stream_priority_sample(spark, sf_dir):
             .localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_prio_")
-    try:
-        staged = os.path.join(root, "li")
-        os.makedirs(staged)
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            li.where(f"l_orderkey % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            shutil.move(
-                os.path.join(tmp, part), os.path.join(staged, f"b{i}.parquet")
-            )
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "l_orderkey long, l_linenumber long, l_quantity long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
+    src = li.localCheckpoint()
+    batches = [src.where(f"l_orderkey % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    top = state["top"]
+    rows = top.select("priority").orderBy(F.desc("priority")).collect()
+    tau = rows[_K].priority if len(rows) > _K else 0
+    return (
+        top.orderBy(F.desc("priority"), "l_orderkey", "l_linenumber")
+        .limit(min(_K, len(rows)))
+        .withColumn(
+            "w_est", F.greatest(F.col("w"), F.lit(tau).cast("long"))
         )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        top = state["top"]
-        rows = top.select("priority").orderBy(F.desc("priority")).collect()
-        tau = rows[_K].priority if len(rows) > _K else 0
-        return (
-            top.orderBy(F.desc("priority"), "l_orderkey", "l_linenumber")
-            .limit(min(_K, len(rows)))
-            .withColumn(
-                "w_est", F.greatest(F.col("w"), F.lit(tau).cast("long"))
-            )
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )

@@ -1,11 +1,10 @@
-"""Streaming twins of the round-6c operators — registered AFTER the
-round-6 window (plans/registry.py); verified by tools/compare.py
-locally this round, candidates for the round-7 rotation.
+"""Streaming twins of the Hamming-dedup and incremental-aggregate
+operators.
 
 - ``stream_hamming_dedup``: the Hamming-admission mirror of
   stream_incremental_dedup — order-DEPENDENT (later batches dedup
-  against earlier admissions), so micro-batches are pinned by file
-  mtime and the oracle unrolls the three stages as chained CTEs.
+  against earlier admissions), so micro-batches replay in a fixed
+  order and the oracle unrolls the three stages as chained CTEs.
 - ``stream_incremental_agg``: maintained aggregate state fed CDC rows
   in micro-batches. Count/sum deltas commute, so NO batch pinning is
   needed — any batching reaches the same state, and the oracle is the
@@ -15,16 +14,13 @@ locally this round, candidates for the round-7 rotation.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators import hamming as HM
 from ..operators import incragg as IA
 from ..operators.diff import snapshot_diff
 from ..sources.testdata import load_table
+from ..streaming.replay import replay
 from .queries_incragg import _snapshots
 from .registry import register
 
@@ -83,30 +79,6 @@ _HAMMING_ORACLE = (
 )
 
 
-def _stage_batches(spark, docs, root: str) -> str:
-    """One parquet file per batch with pinned mtimes (FileStreamSource
-    processes files in (mtime, path) order with maxFilesPerTrigger=1)."""
-    staged = os.path.join(root, "incoming")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
-    for i in range(_N_BATCHES):
-        batch = docs.where(F.expr(_batch_pred_spark(i))).select(
-            "doc_id", "text"
-        )
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
-
-
 @register(
     "stream_hamming_dedup",
     _HAMMING_ORACLE,
@@ -119,14 +91,13 @@ def _stage_batches(spark, docs, root: str) -> str:
 def stream_hamming_dedup(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     store0 = docs.where(F.expr(_STORE0))
-    root = tempfile.mkdtemp(prefix="stream_hamming_")
-    staged = _stage_batches(spark, docs, root)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    return HM.hamming_dedup_stream(stream, store0, max_distance=_MAXD)
+    incoming = docs.where(~F.expr(_STORE0)).select("doc_id", "text")
+    src = incoming.localCheckpoint()
+    batches = [
+        src.where(F.expr(_batch_pred_spark(i))) for i in range(_N_BATCHES)
+    ]
+    with replay(spark, batches) as r:
+        return HM.hamming_dedup_stream(r.stream, store0, max_distance=_MAXD)
 
 
 @register(
@@ -156,20 +127,12 @@ def stream_incremental_agg(spark, sf_dir):
     cdc = snapshot_diff(
         old, new, keys=["o_orderkey"], compare_cols=["o_orderstatus", "m"]
     )
-    root = tempfile.mkdtemp(prefix="stream_incragg_")
-    staged = os.path.join(root, "cdc")
-    # three arbitrary key-hash batches — no pinning needed, deltas commute
-    cdc.withColumn("_b", F.pmod(F.col("o_orderkey"), F.lit(3))).write.mode(
-        "overwrite"
-    ).partitionBy("_b").parquet(staged)
-    schema = (
-        "o_orderkey long, change_type string, "
-        "o_orderstatus_old string, o_orderstatus_new string, "
-        "m_old long, m_new long"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    return IA.incremental_agg_stream(stream, state0, "o_orderstatus", "m")
+    # three arbitrary key-hash batches — order is irrelevant, deltas commute
+    src = cdc.localCheckpoint()
+    batches = [
+        src.where(F.pmod(F.col("o_orderkey"), F.lit(3)) == i) for i in range(3)
+    ]
+    with replay(spark, batches) as r:
+        return IA.incremental_agg_stream(
+            r.stream, state0, "o_orderstatus", "m"
+        )

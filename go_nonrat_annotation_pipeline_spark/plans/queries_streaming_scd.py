@@ -1,10 +1,9 @@
 """Streaming SCD2 dimension-maintenance query
-(streaming/scd_stream.py) — registered AFTER the round-6 window;
-round-7 rotation candidate.
+(streaming/scd_stream.py).
 
 The maintained ≡ recompute contract, proved by the oracle: the stream
-is the events log split into three time-ordered micro-batches (pinned
-by file mtime, maxFilesPerTrigger=1), the incremental dimension is
+is the events log split into three time-ordered micro-batches
+(replayed in order by streaming/replay.py), the incremental dimension is
 folded batch-by-batch, and the DuckDB oracle is the SAME batch-rebuild
 SQL q_scd2_history uses over the whole log — a hash match means the
 incremental fold is exactly equivalent to recomputing from scratch.
@@ -12,50 +11,37 @@ incremental fold is exactly equivalent to recomputing from scratch.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators import scd as SCD
 from ..sources.testdata import load_table
+from ..streaming.replay import replay
 from ..streaming.scd_stream import scd2_dimension_stream
 from .registry import register
 
 _N_BATCHES = 3
 
 
-def _stage_time_ordered(spark, events, root: str) -> str:
-    """Write the events log as three time-ordered parquet files with
-    ascending mtimes (FileStreamSource processes in (mtime, path)
-    order), split at global (ts, event_id) rank terciles — staging
-    only, the operator under test never sees a global sort."""
-    staged = os.path.join(root, "events")
-    os.makedirs(staged, exist_ok=True)
+def _time_ordered_batches(events):
+    """Split the events log into three time-ordered batches at global
+    (ts, event_id) rank terciles — staging only, the operator under
+    test never sees a global sort."""
     n = events.count()
-    ranked = events.withColumn(
-        "_rn",
-        F.row_number().over(Window.orderBy("ts", "event_id")),
-    ).withColumn("_b", ((F.col("_rn") - 1) * _N_BATCHES / n).cast("int"))
-    base = 1_600_000_000
-    for i in range(_N_BATCHES):
-        batch = ranked.where(F.col("_b") == i).select(
+    ranked = (
+        events.withColumn(
+            "_rn",
+            F.row_number().over(Window.orderBy("ts", "event_id")),
+        )
+        .withColumn("_b", ((F.col("_rn") - 1) * _N_BATCHES / n).cast("int"))
+        .localCheckpoint()
+    )
+    return [
+        ranked.where(F.col("_b") == i).select(
             "event_id", "user_id", "ts", "event_type"
         )
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
+        for i in range(_N_BATCHES)
+    ]
 
 
 @register(
@@ -75,21 +61,6 @@ def _stage_time_ordered(spark, events, root: str) -> str:
 )
 def stream_scd2_dimension(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="stream_scd2_")
-    try:
-        staged = _stage_time_ordered(spark, events, root)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, ts timestamp, "
-                "event_type string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        # scd2_dimension_stream drains the stream eagerly and returns a
-        # DataFrame rooted at localCheckpointed state, so the staging
-        # dir is dead weight the moment it returns — reclaim it instead
-        # of leaking a tempdir per bench/correctness run (ADVICE r6)
-        return scd2_dimension_stream(stream)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    with replay(spark, _time_ordered_batches(events)) as r:
+        # drains eagerly; the result is rooted at localCheckpointed state
+        return scd2_dimension_stream(r.stream)

@@ -1,5 +1,4 @@
-"""Streaming semantic-decontamination gate — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Streaming semantic-decontamination gate.
 
 The stream twin of q_semantic_decontam, completing the gate matrix
 (n-gram batch / n-gram stream / semantic batch / semantic stream):
@@ -16,15 +15,12 @@ struct-max aggregate (SCALE.md tail10 posture).
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators.dedup import cosine
 from ..operators.similarity import _as_double
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 from .queries_semantic_decontam import _CTES, _TH_6DP
 
@@ -88,38 +84,10 @@ def stream_semantic_decontam_gate(spark, sf_dir):
         )
         state["q"] = state["q"].unionByName(dirty).localCheckpoint()
 
-    root = tempfile.mkdtemp(prefix="stream_semdecontam_")
-    try:
-        staged = os.path.join(root, "emb")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        corpus = emb.where("label != 0").select("vec_id", "embedding")
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            corpus.where(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["q"]
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    corpus = (
+        emb.where("label != 0").select("vec_id", "embedding").localCheckpoint()
+    )
+    batches = [corpus.where(f"vec_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["q"]

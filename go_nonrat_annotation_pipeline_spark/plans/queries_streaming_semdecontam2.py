@@ -1,5 +1,4 @@
-"""Streaming exact-ANN decontamination gate — round-12 module,
-registered AFTER WINDOW_R12 (leads round 13).
+"""Streaming exact-ANN decontamination gate.
 
 Completes the gate matrix's last cell: the batch ANN gate
 (``q_semantic_decontam_ann``) has a brute-force stream twin
@@ -20,10 +19,6 @@ flagged-rows SQL as the brute-force stream twin.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..operators.decontam_ann import build_bench_cells
@@ -31,6 +26,7 @@ from ..operators.dedup import cosine
 from ..operators.knn_kernel import driver_train_sample, gate_candidate_ids
 from ..operators.similarity import _as_double
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 from .queries_semantic_decontam import _CTES, _TH_6DP
 
@@ -123,46 +119,14 @@ def stream_semantic_decontam_gate_ann(spark, sf_dir):
         )
         parts.append(dirty.localCheckpoint())
 
-    root = tempfile.mkdtemp(prefix="stream_semdecontam_ann_")
-    try:
-        staged = os.path.join(root, "emb")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        # one corpus scan serves all three staged batch files
-        corpus = (
-            emb.where("label != 0")
-            .select("vec_id", "embedding")
-            .localCheckpoint()
-        )
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            corpus.where(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = empty
-        for p in parts:
-            out = out.unionByName(p)
-        return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # one corpus scan serves all three staged batch files
+    corpus = (
+        emb.where("label != 0").select("vec_id", "embedding").localCheckpoint()
+    )
+    batches = [corpus.where(f"vec_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    out = empty
+    for p in parts:
+        out = out.unionByName(p)
+    return out

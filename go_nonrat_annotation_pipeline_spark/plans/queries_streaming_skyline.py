@@ -1,5 +1,4 @@
-"""Streaming Pareto-skyline maintenance — round-13 module, registered
-AFTER WINDOW_R13 (leads round 14).
+"""Streaming Pareto-skyline maintenance.
 
 The streaming form of q_pareto_skyline: documents arrive in
 micro-batches and the skyline folds incrementally as
@@ -21,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .queries_skyline import _POINTS_SQL, _skyline_pass
 from .registry import register
 
@@ -78,47 +78,12 @@ def stream_pareto_skyline(spark, sf_dir):
             state["sky"].unionByName(pts)
         ).localCheckpoint()
 
-    import os
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="stream_skyline_")
-    try:
-        staged = os.path.join(root, "docs")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            docs.where(f"doc_id % 3 = {i}").select(
-                "doc_id", "text", "n_chars"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["sky"].select(
-            "doc_id",
-            F.col("x").alias("n_chars"),
-            F.col("y").alias("uniq_ppm"),
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    src = docs.select("doc_id", "text", "n_chars").localCheckpoint()
+    batches = [src.where(f"doc_id % 3 = {i}") for i in range(3)]
+    with replay(spark, batches) as r:
+        drain(r.stream, handle)
+    return state["sky"].select(
+        "doc_id",
+        F.col("x").alias("n_chars"),
+        F.col("y").alias("uniq_ppm"),
+    )

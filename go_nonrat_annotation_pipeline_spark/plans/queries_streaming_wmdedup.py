@@ -1,5 +1,4 @@
-"""Watermark-TTL streaming dedup — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Watermark-TTL streaming dedup.
 
 `dropDuplicatesWithinWatermark` (Spark 3.5+) is the production answer
 to unbounded dedup state: duplicates of a key are dropped while its
@@ -20,13 +19,10 @@ plumbing runs.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
+from ..streaming.replay import drain, replay
 from .registry import register
 
 _ORACLE = """
@@ -93,49 +89,16 @@ def stream_dedup_within_watermark(spark, sf_dir):
             state["kept"].unionByName(batch_df).localCheckpoint()
         )
 
-    root = tempfile.mkdtemp(prefix="stream_wmdedup_")
-    try:
-        staged = os.path.join(root, "f")
-        os.makedirs(staged)
-        base = 1_600_000_000
-        for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(f"b = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_type string, ts timestamp, "
-                "event_id long, b long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        deduped = stream.withWatermark(
+    src = feed.localCheckpoint()
+    with replay(spark, [src.where(f"b = {i}") for i in range(3)]) as r:
+        deduped = r.stream.withWatermark(
             "ts", "90 days"
         ).dropDuplicatesWithinWatermark(["user_id"])
-        q = (
-            deduped.writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return state["kept"].select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").cast("long").alias("ts_us"),
-            "event_id",
-            F.col("b").cast("long").alias("first_seen_batch"),
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        drain(deduped, handle)
+    return state["kept"].select(
+        "user_id",
+        "event_type",
+        F.unix_micros("ts").cast("long").alias("ts_us"),
+        "event_id",
+        F.col("b").cast("long").alias("first_seen_batch"),
+    )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.bitemporal import bitemporal_history
+from .replay import drain
 
 ASSERT_SCHEMA = (
     "user_id long, val string, valid_us long, recorded_us long, _tie long"
@@ -80,14 +81,8 @@ def assertions_stream_to_store(
     feed: DataFrame, store_dir: str, checkpoint_loc: str
 ) -> None:
     """Drain a bounded assertion ``feed`` into the durable store."""
-    spark = feed.sparkSession
-    q = (
-        feed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_loc)
-        .foreachBatch(make_bitemporal_handler(spark, store_dir))
-        .start()
+    drain(
+        feed,
+        make_bitemporal_handler(feed.sparkSession, store_dir),
+        checkpoint=checkpoint_loc,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()

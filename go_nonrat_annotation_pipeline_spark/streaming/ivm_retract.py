@@ -36,6 +36,7 @@ from ..operators.incrjoin_retract import (
     with_sign,
 )
 from .ivm_store import _read_store
+from .replay import drain
 
 L_SCHEMA = "k long, attr string, sign long"
 R_SCHEMA = "k long, qty long, sign long"
@@ -102,18 +103,11 @@ def join_view_stream_retract(
             df.withColumn("sign", F.lit(1).cast("long")).write.mode(
                 "overwrite"
             ).parquet(seed)
-    q = (
-        feed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_loc)
-        .foreachBatch(
-            make_ivm_retract_handler(spark, l_dir, r_dir, view_dir)
-        )
-        .start()
+    drain(
+        feed,
+        make_ivm_retract_handler(spark, l_dir, r_dir, view_dir),
+        checkpoint=checkpoint_loc,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def committed_batch_frontier(l_dir: str, r_dir: str) -> int | None:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.incrjoin import delta_join
+from .replay import drain
 
 L_SCHEMA = "k long, attr string"
 R_SCHEMA = "k long, qty long"
@@ -114,16 +115,11 @@ def join_view_stream_durable(
         seed = os.path.join(path, "admit_batch=-1")
         if not os.path.isdir(seed):
             df.write.mode("overwrite").parquet(seed)
-    q = (
-        feed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_loc)
-        .foreachBatch(make_ivm_handler(spark, l_dir, r_dir, view_dir))
-        .start()
+    drain(
+        feed,
+        make_ivm_handler(spark, l_dir, r_dir, view_dir),
+        checkpoint=checkpoint_loc,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def read_view(spark, view_dir: str) -> DataFrame:

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .replay import drain
+
 
 def late_data_audit(
     event_stream: DataFrame,
@@ -68,15 +70,7 @@ def late_data_audit(
             (int(batch_id), int(n_late), int(n_total - n_late), int(run_max))
         )
 
-    q = (
-        event_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(event_stream, handle)
     return spark.createDataFrame(
         records,
         "batch_id long, n_late long, n_ontime long, wm_base_us long",

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.scd import scd2_history
+from .replay import drain
 
 
 def scd2_dimension_stream(
@@ -157,15 +158,7 @@ def scd2_dimension_stream(
             .localCheckpoint()
         )
 
-    q = (
-        event_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(event_stream, handle)
     closed = state["closed"].select(
         key_col,
         "attr",

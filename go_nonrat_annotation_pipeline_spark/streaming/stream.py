@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .replay import drain
+
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -234,11 +236,7 @@ def merge_into_store(annot_stream: DataFrame, store, run_ts) -> list:
             return
         stats.append(store.merge_upsert(batch_df, run_ts))
 
-    q = annot_stream.writeStream.outputMode("append").foreachBatch(handle).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(annot_stream, handle)
     return stats
 
 
@@ -330,11 +328,7 @@ def incremental_dedup_stream(
             .localCheckpoint()
         )
 
-    q = doc_stream.writeStream.outputMode("append").foreachBatch(handle).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(doc_stream, handle)
     return state["flags"]
 
 
@@ -385,20 +379,11 @@ def incremental_dedup_stream_durable(
             initial_store.select("doc_id", "text")
         ).write.mode("overwrite").parquet(seed_dir)
 
-    q = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_loc)
-        .foreachBatch(
-            _incdedup_make_handler(
-                spark, store_dir, flags_dir, verify_threshold
-            )
-        )
-        .start()
+    drain(
+        doc_stream,
+        _incdedup_make_handler(spark, store_dir, flags_dir, verify_threshold),
+        checkpoint=checkpoint_loc,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def _incdedup_make_handler(

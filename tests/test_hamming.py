@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_nonrat_annotation_pipeline_spark.operators import hamming as HM
+from go_nonrat_annotation_pipeline_spark.streaming.replay import replay
 
 
 def _brute_pairs(rows, max_d):
@@ -122,33 +123,19 @@ def test_incremental_pairs_only_cross_store(spark):
     assert got == {(10, 1, 0), (11, 1, 1)}
 
 
-def test_stream_admission_blocks_later_batches(spark, tmp_path):
+def test_stream_admission_blocks_later_batches(spark):
     """A doc admitted in batch 1 must flag its near-dup in batch 2 —
     the accumulating-store semantics."""
-    import os
-
-    import pyspark.sql.functions as F
-
     store0 = spark.createDataFrame([(1, "alpha beta gamma delta")], "doc_id long, text string")
     batches = [
         [(10, "completely different words entirely")],   # admitted
         [(20, "completely different words entirely")],   # dup of 10
     ]
-    staged = str(tmp_path / "in")
-    os.makedirs(staged)
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        tmp = str(tmp_path / f"t{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(staged, f"b{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    out = HM.hamming_dedup_stream(stream, store0, max_distance=4)
+    frames = [
+        spark.createDataFrame(rows, "doc_id long, text string")
+        for rows in batches
+    ]
+    with replay(spark, frames) as r:
+        out = HM.hamming_dedup_stream(r.stream, store0, max_distance=4)
     got = {(r.incoming_id, r.store_id) for r in out.collect()}
     assert got == {(20, 10)}

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from go_nonrat_annotation_pipeline_spark.operators import diff as DF_
 from go_nonrat_annotation_pipeline_spark.operators import incragg as IA
+from go_nonrat_annotation_pipeline_spark.streaming.replay import replay
 
 
 def _maintained_vs_recomputed(spark, old_rows, new_rows):
@@ -59,7 +60,7 @@ def test_null_group_and_measure_are_maintained(spark):
     assert recomputed.exceptAll(maintained).isEmpty()
 
 
-def test_stream_batching_invariance(spark, tmp_path):
+def test_stream_batching_invariance(spark):
     """The streaming fold must reach the same state for ANY batching of
     the same CDC rows (deltas commute) — checked against the batch
     operator AND a direct recompute."""
@@ -78,18 +79,11 @@ def test_stream_batching_invariance(spark, tmp_path):
     cdc = DF_.snapshot_diff(old_df, new_df, keys=["k"], compare_cols=["grp", "m"])
     want = {(r.grp, r.n, r.total) for r in IA.group_agg_state(new_df, "grp", "m").collect()}
     for n_batches in (1, 4):
-        staged = str(tmp_path / f"cdc_{n_batches}")
-        cdc.withColumn("_b", F.pmod(F.col("k"), F.lit(n_batches))).write.mode(
-            "overwrite"
-        ).partitionBy("_b").parquet(staged)
-        stream = (
-            spark.readStream.schema(
-                "k long, change_type string, grp_old string, grp_new string, "
-                "m_old long, m_new long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        out = IA.incremental_agg_stream(stream, state0, "grp", "m")
+        batches = [
+            cdc.where(F.pmod(F.col("k"), F.lit(n_batches)) == i)
+            for i in range(n_batches)
+        ]
+        with replay(spark, batches) as r:
+            out = IA.incremental_agg_stream(r.stream, state0, "grp", "m")
         got = {(r.grp, r.n, r.total) for r in out.collect()}
         assert got == want, f"batching={n_batches}"

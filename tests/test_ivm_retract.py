@@ -7,13 +7,13 @@ arriving before its insert nets to zero (Z-relation algebra)."""
 from __future__ import annotations
 
 import os
-import shutil
 
 from go_nonrat_annotation_pipeline_spark.streaming.ivm_retract import (
     join_view_stream_retract,
     make_ivm_retract_handler,
     read_view_net,
 )
+from go_nonrat_annotation_pipeline_spark.streaming.replay import replay, stage
 
 SCHEMA = "side string, op string, k long, attr string, qty long"
 
@@ -59,23 +59,6 @@ def _net_join(spark, batches):
     )
 
 
-def _stage(spark, batches, root):
-    staged = os.path.join(root, "feed")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
-    for i, rows in enumerate(batches):
-        tmp = os.path.join(root, f"tmp_{i}")
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
-
-
 def _dirs(tmp_path):
     return (
         str(tmp_path / "l"),
@@ -85,12 +68,8 @@ def _dirs(tmp_path):
     )
 
 
-def _stream(spark, staged):
-    return (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+def _frames(spark, batches):
+    return [spark.createDataFrame(rows, SCHEMA) for rows in batches]
 
 
 def _empties(spark):
@@ -103,15 +82,14 @@ def _empties(spark):
 def test_retract_stop_restart_resumes_without_double_count(spark, tmp_path):
     l_dir, r_dir, v_dir, ckpt = _dirs(tmp_path)
     empty_l, empty_r = _empties(spark)
-    root = str(tmp_path / "stage1")
-    staged = _stage(spark, [B0, B1], root)
-    join_view_stream_retract(
-        _stream(spark, staged), empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
-    )
-    _stage(spark, [B0, B1, B2], root)
-    join_view_stream_retract(
-        _stream(spark, staged), empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
-    )
+    with replay(spark, _frames(spark, [B0, B1])) as r:
+        join_view_stream_retract(
+            r.stream, empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
+        )
+        stage(spark.createDataFrame(B2, SCHEMA), r.staged, 2)
+        join_view_stream_retract(
+            r.stream, empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
+        )
     got = sorted(tuple(r) for r in read_view_net(spark, v_dir).collect())
     assert got == _net_join(spark, [B0, B1, B2])
 
@@ -230,11 +208,10 @@ def test_delete_before_insert_nets_to_zero(spark, tmp_path):
     early_delete = [("L", "D", 5, "px", None), ("R", "I", 5, None, 50)]
     late_insert = [("L", "I", 5, "px", None), ("L", "I", 6, "p6", None),
                    ("R", "I", 6, None, 60)]
-    root = str(tmp_path / "stage1")
-    staged = _stage(spark, [early_delete, late_insert], root)
-    join_view_stream_retract(
-        _stream(spark, staged), empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
-    )
+    with replay(spark, _frames(spark, [early_delete, late_insert])) as r:
+        join_view_stream_retract(
+            r.stream, empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
+        )
     got = sorted(tuple(r) for r in read_view_net(spark, v_dir).collect())
     # k=5's insert and early delete cancel; only k=6 survives
     assert got == [(6, "p6", 60)]

@@ -6,7 +6,6 @@ simulated mid-batch crash, never double-counting a replayed delta."""
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -15,6 +14,7 @@ from go_nonrat_annotation_pipeline_spark.streaming.ivm_store import (
     make_ivm_handler,
     read_view,
 )
+from go_nonrat_annotation_pipeline_spark.streaming.replay import replay, stage
 
 SCHEMA = "side string, k long, attr string, qty long"
 
@@ -31,23 +31,6 @@ def _full_join(spark, batches):
     return sorted(tuple(r) for r in lo.join(ro, "k").collect())
 
 
-def _stage(spark, batches, root):
-    staged = os.path.join(root, "feed")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
-    for i, rows in enumerate(batches):
-        tmp = os.path.join(root, f"tmp_{i}")
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
-
-
 def _dirs(tmp_path):
     return (
         str(tmp_path / "l"),
@@ -57,29 +40,24 @@ def _dirs(tmp_path):
     )
 
 
-def _stream(spark, staged):
-    return (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+def _frames(spark, batches):
+    return [spark.createDataFrame(rows, SCHEMA) for rows in batches]
 
 
 def test_stop_restart_resumes_without_double_count(spark, tmp_path):
     l_dir, r_dir, v_dir, ckpt = _dirs(tmp_path)
     empty_l = spark.createDataFrame([], "k long, attr string")
     empty_r = spark.createDataFrame([], "k long, qty long")
-    root = str(tmp_path / "stage1")
-    staged = _stage(spark, [B0, B1], root)
-    join_view_stream_durable(
-        _stream(spark, staged), empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
-    )
-    # "kill" = the first drain ended; a third batch arrives, restart
-    # against the SAME checkpoint — b0/b1 must not reprocess
-    _stage(spark, [B0, B1, B2], root)
-    join_view_stream_durable(
-        _stream(spark, staged), empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
-    )
+    with replay(spark, _frames(spark, [B0, B1])) as r:
+        join_view_stream_durable(
+            r.stream, empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
+        )
+        # "kill" = the first drain ended; a third batch arrives, restart
+        # against the SAME checkpoint — b0/b1 must not reprocess
+        stage(spark.createDataFrame(B2, SCHEMA), r.staged, 2)
+        join_view_stream_durable(
+            r.stream, empty_l, empty_r, l_dir, r_dir, v_dir, ckpt
+        )
     got = sorted(tuple(r) for r in read_view(spark, v_dir).collect())
     assert got == _full_join(spark, [B0, B1, B2])
 
@@ -138,13 +116,11 @@ def test_seeded_bases_probe_into_deltas(spark, tmp_path):
     l_dir, r_dir, v_dir, ckpt = _dirs(tmp_path)
     seed_l = spark.createDataFrame([(9, "seed")], "k long, attr string")
     seed_r = spark.createDataFrame([(9, 90)], "k long, qty long")
-    staged = _stage(
-        spark, [[("R", 9, None, 91)], [("L", 9, "p9", None)]],
-        str(tmp_path / "stage"),
-    )
-    join_view_stream_durable(
-        _stream(spark, staged), seed_l, seed_r, l_dir, r_dir, v_dir, ckpt
-    )
+    batches = [[("R", 9, None, 91)], [("L", 9, "p9", None)]]
+    with replay(spark, _frames(spark, batches)) as r:
+        join_view_stream_durable(
+            r.stream, seed_l, seed_r, l_dir, r_dir, v_dir, ckpt
+        )
     got = sorted(tuple(r) for r in read_view(spark, v_dir).collect())
     # deltas vs seeds: (seed,91), (p9,90), (p9,91) — V0=(seed,90) is
     # the caller's to materialize, per the docstring

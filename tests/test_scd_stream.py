@@ -1,50 +1,27 @@
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import functions as F
 
 from go_nonrat_annotation_pipeline_spark.operators.scd import scd2_history
+from go_nonrat_annotation_pipeline_spark.streaming.replay import replay
 from go_nonrat_annotation_pipeline_spark.streaming.scd_stream import (
     scd2_dimension_stream,
 )
 
 
-def _stage(spark, rows, splits, tmp_path):
-    """Write rows (already time-ordered) into len(splits) mtime-pinned
-    parquet files under pytest-reclaimed tmp_path; splits are index cut
-    points."""
-    root = tempfile.mkdtemp(prefix="scd_stream_test_", dir=str(tmp_path))
-    staged = os.path.join(root, "events")
-    os.makedirs(staged)
+def _dimension(spark, rows, splits):
+    """Replay rows (already time-ordered) as len(splits) + 1 batches cut
+    at the index points in splits; return the maintained dimension."""
     schema = "event_id long, user_id long, ts timestamp, event_type string"
-    base = 1_600_000_000
     bounds = [0, *splits, len(rows)]
-    for i in range(len(bounds) - 1):
-        chunk = rows[bounds[i]:bounds[i + 1]]
-        tmp = os.path.join(root, f"tmp_{i}")
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
-    return staged
-
-
-def _stream(spark, staged):
-    return (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    frames = [
+        spark.createDataFrame(rows[bounds[i]:bounds[i + 1]], schema)
+        for i in range(len(bounds) - 1)
+    ]
+    with replay(spark, frames) as r:
+        return scd2_dimension_stream(r.stream)
 
 
 ROWS = [
@@ -95,18 +72,16 @@ NULL_ROWS = [
 ]
 
 
-def test_stream_equals_batch_rebuild_any_batching(spark, tmp_path):
+def test_stream_equals_batch_rebuild_any_batching(spark):
     schema = "event_id long, user_id long, ts timestamp, event_type string"
     want = _canon(scd2_history(spark.createDataFrame(ROWS, schema)))
     for splits in ([3], [3, 6], [2, 4, 7]):
-        staged = _stage(spark, ROWS, splits, tmp_path)
-        got = _canon(scd2_dimension_stream(_stream(spark, staged)))
+        got = _canon(_dimension(spark, ROWS, splits))
         assert got == want, f"splits={splits}"
 
 
-def test_constant_key_never_splits(spark, tmp_path):
-    staged = _stage(spark, ROWS, [3, 6], tmp_path)
-    dim = scd2_dimension_stream(_stream(spark, staged))
+def test_constant_key_never_splits(spark):
+    dim = _dimension(spark, ROWS, [3, 6])
     u2 = [r for r in dim.collect() if r.user_id == 2]
     # x-run spans batches 0,1,2 as ONE interval, then changes to y
     attrs = sorted((r.attr, r.version) for r in u2)
@@ -115,14 +90,13 @@ def test_constant_key_never_splits(spark, tmp_path):
     assert x.is_current == 0 and x.valid_to_us is not None
 
 
-def test_single_open_interval_per_key(spark, tmp_path):
-    staged = _stage(spark, ROWS, [4], tmp_path)
-    dim = scd2_dimension_stream(_stream(spark, staged))
+def test_single_open_interval_per_key(spark):
+    dim = _dimension(spark, ROWS, [4])
     cur = dim.where(F.col("is_current") == 1)
     assert cur.count() == cur.select("user_id").distinct().count() == 3
 
 
-def test_null_attr_runs_maintained_equals_rebuild(spark, tmp_path):
+def test_null_attr_runs_maintained_equals_rebuild(spark):
     schema = "event_id long, user_id long, ts timestamp, event_type string"
     want = _canon(scd2_history(spark.createDataFrame(NULL_ROWS, schema)))
     # batch semantics: NULL runs collapse null-safely
@@ -137,6 +111,5 @@ def test_null_attr_runs_maintained_equals_rebuild(spark, tmp_path):
         (5, None, 2),
     ]
     for splits in ([2], [2, 4], [1, 3, 5]):
-        staged = _stage(spark, NULL_ROWS, splits, tmp_path)
-        got = _canon(scd2_dimension_stream(_stream(spark, staged)))
+        got = _canon(_dimension(spark, NULL_ROWS, splits))
         assert got == want, f"splits={splits}"

@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 
 from go_nonrat_annotation_pipeline_spark import schemas as S
 from go_nonrat_annotation_pipeline_spark.sources.testdata import load_table
+from go_nonrat_annotation_pipeline_spark.streaming.replay import drain, replay
 from go_nonrat_annotation_pipeline_spark.streaming.stream import (
     merge_into_store,
     read_events_stream,
@@ -238,11 +239,10 @@ def test_checkpoint_restart_foreach_batch_merge(spark, tmp_path, incoming_dir):
     touch (reference semantics: MAHDL.java:127-187 idempotent touch),
     and the store ends with exactly one row per key.
 
-    The writeStream is built inline rather than via merge_into_store so
-    streaming/stream.py stays byte-frozen this round (its rows hold
-    round-3 driver attestations outside the round-4 window); the merge
-    path exercised — foreachBatch → AnnotStore.merge_upsert — is the
-    identical store call.
+    The handler is inline rather than merge_into_store because the
+    restart needs a checkpointLocation; the merge path exercised —
+    foreachBatch → AnnotStore.merge_upsert — is the identical store
+    call.
     """
     store = AnnotStore(spark, str(tmp_path / "fa_ckpt"))
     store.init_empty()
@@ -265,19 +265,12 @@ def test_checkpoint_restart_foreach_batch_merge(spark, tmp_path, incoming_dir):
                 return
             stats.append(store.merge_upsert(batch_df, run_ts))
 
-        q = (
+        stream = (
             spark.readStream.schema(INCOMING_SCHEMA)
             .option("recursiveFileLookup", "true")
             .parquet(src)
-            .writeStream.outputMode("append")
-            .foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drain(stream, handle, checkpoint=ckpt)
         return stats
 
     # micro-batch 1: two fresh annotations, committed to the checkpoint
@@ -357,12 +350,10 @@ def test_checkpoint_restart_no_reprocessing(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # streaming incremental dedup (accumulating store)
 # ---------------------------------------------------------------------------
-def test_incremental_dedup_stream_accumulates_store(spark, tmp_path):
+def test_incremental_dedup_stream_accumulates_store(spark):
     """A doc admitted in batch 0 must flag its near-dup arriving in
     batch 1 — the store accumulates; and a batch-1 dup of the INITIAL
     store is flagged too."""
-    import os
-
     from go_nonrat_annotation_pipeline_spark.streaming.stream import (
         incremental_dedup_stream,
     )
@@ -374,24 +365,8 @@ def test_incremental_dedup_stream_accumulates_store(spark, tmp_path):
         [(200, t_b)],                       # novel -> admitted
         [(300, t_b), (400, t_a)],           # 300 dups admitted 200; 400 dups store 100
     ]
-    staged = tmp_path / "staged"
-    staged.mkdir()
-    base = 1_600_000_000
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        tmp = tmp_path / f"tmp{i}"
-        df.coalesce(1).write.parquet(str(tmp))
-        part = next(p for p in os.listdir(tmp) if p.startswith("part-"))
-        dst = staged / f"b{i}.parquet"
-        (tmp / part).rename(dst)
-        os.utime(dst, (base + i, base + i))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(staged))
-    )
-    out = incremental_dedup_stream(stream, store0).collect()
+    with replay(spark, _doc_frames(spark, batches)) as r:
+        out = incremental_dedup_stream(r.stream, store0).collect()
     pairs = {(r.incoming_id, r.store_id): r.jaccard for r in out}
     assert set(pairs) == {(300, 200), (400, 100)}
     assert all(j == 1.0 for j in pairs.values())
@@ -460,19 +435,11 @@ def test_windowed_cms_never_undercounts(spark):
     assert all(r.est >= r.true_cnt for r in rows)
 
 
-def _stage_incdedup_batches(spark, tmp_path, batches):
-    staged = tmp_path / "staged"
-    staged.mkdir()
-    base = 1_600_000_000
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        tmp = tmp_path / f"tmp{i}"
-        df.coalesce(1).write.parquet(str(tmp))
-        part = next(p for p in os.listdir(tmp) if p.startswith("part-"))
-        dst = staged / f"b{i}.parquet"
-        (tmp / part).rename(dst)
-        os.utime(dst, (base + i, base + i))
-    return staged
+def _doc_frames(spark, batches):
+    return [
+        spark.createDataFrame(rows, "doc_id long, text string")
+        for rows in batches
+    ]
 
 
 def test_incremental_dedup_store_restart_recovery(spark, tmp_path):
@@ -497,17 +464,9 @@ def test_incremental_dedup_store_restart_recovery(spark, tmp_path):
         [(300, t_b), (500, t_c)],     # 300 dups admitted 200; 500 novel
         [(400, t_a), (600, t_c)],     # 400 dups store 100; 600 dups admitted 500
     ]
-    staged = _stage_incdedup_batches(spark, tmp_path, batches)
     store_dir = str(tmp_path / "store")
     flags_dir = str(tmp_path / "flags")
     ckpt = str(tmp_path / "ckpt")
-
-    def make_stream():
-        return (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(staged))
-        )
 
     # --- first run: real handler for batch 0, simulated kill in batch 1
     minhash_signatures(store0.select("doc_id", "text")).write.mode(
@@ -528,26 +487,19 @@ def test_incremental_dedup_store_restart_recovery(spark, tmp_path):
             raise RuntimeError("simulated kill mid-batch")
         real(batch_df, batch_id)
 
-    q = (
-        make_stream()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(crashing)
-        .start()
-    )
-    with pytest.raises(Exception, match="simulated kill|Query .* terminated"):
-        q.processAllAvailable()
-    q.stop()
+    with replay(spark, _doc_frames(spark, batches)) as feed:
+        with pytest.raises(Exception, match="simulated kill|Query .* terminated"):
+            drain(feed.stream, crashing, checkpoint=ckpt)
 
-    # the crash left batch 0 committed, batch 1 dirty on disk
-    store_mid = spark.read.parquet(store_dir)
-    assert 999 in {r._id for r in store_mid.select("_id").collect()}
+        # the crash left batch 0 committed, batch 1 dirty on disk
+        store_mid = spark.read.parquet(store_dir)
+        assert 999 in {r._id for r in store_mid.select("_id").collect()}
 
-    # --- restart from the same checkpoint -----------------------------
-    ST.incremental_dedup_stream_durable(
-        make_stream(), store0, store_dir, flags_dir, ckpt,
-        verify_threshold=0.7,
-    )
+        # --- restart from the same checkpoint -------------------------
+        ST.incremental_dedup_stream_durable(
+            feed.stream, store0, store_dir, flags_dir, ckpt,
+            verify_threshold=0.7,
+        )
 
     # --- invariants ----------------------------------------------------
     store = spark.read.parquet(store_dir)
@@ -587,17 +539,9 @@ def test_incremental_dedup_store_truncated_file_and_bulk_dups(
         # bulk dup set: every 1000+i exactly duplicates admitted 200
         [(1000 + i, t_b) for i in range(n_dup)] + [(500, t_c)],
     ]
-    staged = _stage_incdedup_batches(spark, tmp_path, batches)
     store_dir = str(tmp_path / "store")
     flags_dir = str(tmp_path / "flags")
     ckpt = str(tmp_path / "ckpt")
-
-    def make_stream():
-        return (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(staged))
-        )
 
     minhash_signatures(store0.select("doc_id", "text")).write.mode(
         "overwrite"
@@ -617,23 +561,16 @@ def test_incremental_dedup_store_truncated_file_and_bulk_dups(
             raise RuntimeError("simulated kill mid-batch")
         real(batch_df, batch_id)
 
-    q = (
-        make_stream()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(crashing)
-        .start()
-    )
-    with pytest.raises(Exception, match="simulated kill|Query .* terminated"):
-        q.processAllAvailable()
-    q.stop()
+    with replay(spark, _doc_frames(spark, batches)) as feed:
+        with pytest.raises(Exception, match="simulated kill|Query .* terminated"):
+            drain(feed.stream, crashing, checkpoint=ckpt)
 
-    # restart against the same checkpoint replays batch 1 and must not
-    # trip over the corrupt footer
-    ST.incremental_dedup_stream_durable(
-        make_stream(), store0, store_dir, flags_dir, ckpt,
-        verify_threshold=0.7,
-    )
+        # restart against the same checkpoint replays batch 1 and must
+        # not trip over the corrupt footer
+        ST.incremental_dedup_stream_durable(
+            feed.stream, store0, store_dir, flags_dir, ckpt,
+            verify_threshold=0.7,
+        )
 
     store = spark.read.parquet(store_dir)
     admitted = sorted(r._id for r in store.select("_id").distinct().collect())

@@ -12,78 +12,56 @@ stream's own progress log pin eviction numerically."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
+import json
+
+from go_nonrat_annotation_pipeline_spark.streaming.replay import drain, replay
 
 DAY_US = 86_400 * 1_000_000
 T0 = 1_600_000_000 * 1_000_000  # epoch-us base
 
 
-def _write_batch(spark, root, i, rows):
-    tmp = os.path.join(root, f"tmp_{i}")
-    df = spark.createDataFrame(
+def _batch(spark, rows):
+    return spark.createDataFrame(
         [(k, ts // 1_000_000) for k, ts in rows], "user_id long, ts_s long"
     ).selectExpr("user_id", "CAST(to_timestamp(ts_s) AS TIMESTAMP) AS ts")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-    dst = os.path.join(root, "feed", f"b{i}.parquet")
-    shutil.move(os.path.join(tmp, part), dst)
-    os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-    shutil.rmtree(tmp)
 
 
-def test_duplicate_after_eviction_passes_the_gate(spark, tmp_path):
-    root = str(tmp_path)
-    os.makedirs(os.path.join(root, "feed"))
-    # batch 0: A and C arrive
-    _write_batch(spark, root, 0, [(1, T0), (3, T0)])
-    # batch 1: C duplicates WITHIN the 1-day delay (dropped); B's event
-    # 10 days on advances the watermark to T0+9d, past A's and C's
-    # expiry (event time + 1d) -> both evict after this batch
-    _write_batch(
-        spark, root, 1, [(3, T0 + DAY_US // 2), (2, T0 + 10 * DAY_US)]
-    )
-    # batch 2: eviction lags one batch — the watermark advanced by
-    # batch 1 is applied during batch 2 and state removal runs at its
-    # END, so this filler batch is what actually evicts A and C
-    _write_batch(spark, root, 2, [(4, T0 + 11 * DAY_US)])
-    # batch 3: A replays ABOVE the watermark after its state evicted ->
-    # emitted AGAIN (TTL semantics, the documented contract)
-    _write_batch(spark, root, 3, [(1, T0 + 22 * DAY_US)])
+def test_duplicate_after_eviction_passes_the_gate(spark):
+    batches = [
+        # batch 0: A and C arrive
+        _batch(spark, [(1, T0), (3, T0)]),
+        # batch 1: C duplicates WITHIN the 1-day delay (dropped); B's
+        # event 10 days on advances the watermark to T0+9d, past A's
+        # and C's expiry (event time + 1d) -> both evict after this batch
+        _batch(spark, [(3, T0 + DAY_US // 2), (2, T0 + 10 * DAY_US)]),
+        # batch 2: eviction lags one batch — the watermark advanced by
+        # batch 1 is applied during batch 2 and state removal runs at
+        # its END, so this filler batch is what actually evicts A and C
+        _batch(spark, [(4, T0 + 11 * DAY_US)]),
+        # batch 3: A replays ABOVE the watermark after its state
+        # evicted -> emitted AGAIN (TTL semantics, the documented
+        # contract)
+        _batch(spark, [(1, T0 + 22 * DAY_US)]),
+    ]
 
     kept = []
-    progress = []
 
     def handle(batch_df, batch_id):
         kept.extend(
             (r.user_id, r.ts) for r in batch_df.collect()
         )
 
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(root, "feed"))
-    )
-    q = (
-        stream.withWatermark("ts", "1 day")
-        .dropDuplicatesWithinWatermark(["user_id"])
-        .writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        time.sleep(0.5)
-        import json
-
-        progress = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in (json.loads(pp.json) for pp in q.recentProgress)
-            if p.get("stateOperators") and p["numInputRows"] > 0
-        ]
-    finally:
-        q.stop()
+    with replay(spark, batches) as r:
+        q = drain(
+            r.stream.withWatermark("ts", "1 day")
+            .dropDuplicatesWithinWatermark(["user_id"]),
+            handle,
+        )
+    progress = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in (json.loads(pp.json) for pp in q.recentProgress)
+        if p.get("stateOperators") and p["numInputRows"] > 0
+    ]
 
     by_key = {}
     for k, ts in kept:
